@@ -792,6 +792,72 @@ def test_merge_schema_evolves_additively_without_rewrites(spark, mart):
         ledger.ledger_merge(spark, path, upd2, "k", merge_schema=True)
 
 
+def test_reads_plan_from_recorded_schema_without_inference_jobs(
+    spark, mart, count_jobs, monkeypatch
+):
+    path, _ = mart
+    jobs, _ = count_jobs(lambda: ledger.ledger_read(spark, path))
+    assert jobs == 0
+    # the read planned inside a merge infers nothing either
+    planned = []
+    read_partitions = ledger._read_partitions
+
+    def counted(*args, **kwargs):
+        n, out = count_jobs(lambda: read_partitions(*args, **kwargs))
+        planned.append(n)
+        return out
+
+    monkeypatch.setattr(ledger, "_read_partitions", counted)
+    upd = spark.createDataFrame(
+        [(3, 999.0, "2000", 7)], "k long, price double, year string, tier int"
+    )
+    ledger.ledger_merge(spark, path, upd, "k", merge_schema=True)
+    assert planned == [0]
+    # after the evolution, directories written before it read back the new
+    # column as typed NULLs, in the recorded column order
+    ledger.ledger_delete(spark, path, spark.createDataFrame([(4,)], "k long"), "k", mode="dv")
+    jobs, snap = count_jobs(lambda: ledger.ledger_read(spark, path))
+    assert jobs == 0
+    assert snap.dtypes == [
+        ("k", "bigint"), ("price", "double"), ("year", "string"), ("tier", "int"),
+    ]
+    got = {r.k: (r.price, r.tier) for r in snap.collect()}
+    assert got[3] == (999.0, 7) and got[1] == (10.0, None) and got[2] == (20.0, None)
+    assert 4 not in got and len(got) == 29
+
+
+def test_writes_conform_batch_types_to_recorded_schema(spark, tmp_path):
+    # Python ints default to bigint: a merge or replacement into an `int`
+    # table must write INT32 files, or every later read that declares the
+    # recorded schema would fail to convert INT64 down to int
+    path = str(tmp_path / "t")
+    ledger.ledger_write(
+        spark,
+        spark.createDataFrame([(k, k % 2) for k in range(6)], "k int, p int"),
+        path,
+        "p",
+    )
+    ledger.ledger_merge(spark, path, spark.createDataFrame([(1, 1), (9, 1)], ["k", "p"]), "k")
+    ledger.ledger_replace_partitions(
+        spark, path, spark.createDataFrame([(0, 0), (20, 0)], ["k", "p"]), ["0"]
+    )
+    ledger.ledger_delete(spark, path, spark.createDataFrame([(3,)], ["k"]), "k", mode="dv")
+    snap = ledger.ledger_read(spark, path)
+    assert snap.dtypes == [("k", "int"), ("p", "int")]
+    assert sorted(r.k for r in snap.collect()) == [0, 1, 5, 9, 20]
+    # a value the recorded type cannot hold is refused, not wrapped
+    with pytest.raises(Exception, match="cannot hold"):
+        ledger.ledger_merge(
+            spark, path, spark.createDataFrame([(2**40, 1)], ["k", "p"]), "k"
+        )
+    # re-typing a column is not evolution
+    with pytest.raises(ValueError, match="re-type"):
+        ledger.ledger_merge(
+            spark, path, spark.createDataFrame([("x", 1)], "k string, p int"), "k"
+        )
+    assert sorted(r.k for r in ledger.ledger_read(spark, path).collect()) == [0, 1, 5, 9, 20]
+
+
 # ---------------------------------------------------------------------------
 # optimistic concurrency: disjoint-partition writers rebase, overlapping
 # writers conflict (Delta VLDB 2020 §3.2 at the partition grain)

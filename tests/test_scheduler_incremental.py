@@ -41,6 +41,39 @@ def test_no_catchup_after_downtime(tmp_path):
     assert filled == [dt.datetime(2026, 8, d) for d in range(1, 7)]
 
 
+def test_state_write_failing_midway_keeps_previous_state(tmp_path, monkeypatch):
+    state = tmp_path / "wm.json"
+    s = scheduler.DailyScheduler(str(state), lambda start: None)
+    s.tick(dt.datetime(2026, 8, 2, 6))
+
+    class TornFile:
+        """A crash halfway through the write: half the bytes land, then die."""
+
+        def __init__(self, path, mode):
+            self.f = open(path, mode)
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.f.close()
+
+        def write(self, data):
+            self.f.write(data[: len(data) // 2])
+            self.f.flush()
+            raise OSError("disk gone")
+
+    monkeypatch.setattr(scheduler, "open", TornFile, raising=False)
+    with pytest.raises(OSError, match="disk gone"):
+        s.tick(dt.datetime(2026, 8, 3, 6))
+    monkeypatch.undo()
+    # the previous state is intact and the torn temp file is gone, so the
+    # next tick re-runs the interval
+    assert list(tmp_path.iterdir()) == [state]
+    assert s._read_completed() == {dt.datetime(2026, 8, 1)}
+    assert s.tick(dt.datetime(2026, 8, 3, 6)) == dt.datetime(2026, 8, 2)
+
+
 @pytest.mark.slow
 def test_incremental_refresh_touches_only_recent_partitions(spark, tmp_path):
     raw, mart = str(tmp_path / "raw"), str(tmp_path / "marts")

@@ -14,7 +14,7 @@ one shuffle of (key, partial_count) pairs, not a sort.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -68,6 +68,28 @@ def expect_empty(violations: DataFrame, name: str) -> None:
     if n:
         sample = [r.asDict() for r in violations.limit(5).collect()]
         raise AssertionError(f"data-quality test {name!r} failed; sample: {sample}")
+
+
+def expect_rules(df: DataFrame, rules: Mapping[str, str]) -> None:
+    """Fail-fast gate for several row-level tests over one table in ONE
+    aggregate, where dbt compiles one query per test.
+
+    ``rules`` maps each test name to a SQL predicate that is TRUE on a
+    violating row (``"city IS NULL"``). Every rule is counted with
+    ``count_if``, so a predicate that evaluates to NULL is not a violation
+    — the same rows ``df.filter(predicate)`` would keep. Rows are fetched
+    only for a failing rule: the error names the first one in declaration
+    order, its violation count and a sample of at most 5 violating rows."""
+    if not rules:
+        raise ValueError("expect_rules needs at least one rule")
+    counts = df.agg(*[F.count_if(F.expr(p)) for p in rules.values()]).first()
+    for (name, predicate), n in zip(rules.items(), counts):
+        if n:
+            sample = [r.asDict() for r in df.filter(predicate).limit(5).collect()]
+            raise AssertionError(
+                f"data-quality test {name!r} failed: {n} violating row(s); "
+                f"sample: {sample}"
+            )
 
 
 def relationships_violations(

@@ -11,6 +11,19 @@ sharing one SparkSession; the chain fails fast like Airflow's
 trigger_rule="all_success"; retries apply per stage (only the HTTP source
 meaningfully needs them); the schedule is external (cron / driver) and
 threads ``data_interval_start`` through as the batch parameter.
+
+Each stage issues the fewest Spark actions its contract needs (a warm
+interval runs 11 jobs on local[4]):
+
+- ingest is the raw write alone: the fetch is not cached and runs once
+  per city inside it, and the routed-error count is an observed metric
+  of the same job;
+- raw and the marts are read back with the schema of the frame that
+  wrote them, never inferred (an inference job per read, and a failure
+  on a fresh raw path that no good row reached);
+- the row-level gates of a table are one ``count_if`` aggregate
+  (``quality.expect_rules``) where dbt runs a query per test; ``unique``
+  stays its own grouped check.
 """
 
 from __future__ import annotations
@@ -21,7 +34,7 @@ import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Observation, SparkSession, functions as F
 
 from weather_api_automate_etl_spark.operators import marts, quality, staging
 from weather_api_automate_etl_spark.sources import json_ingest, rest
@@ -97,28 +110,25 @@ class WeatherPipeline:
     pin_extracted_at: bool = False
 
     def run(self, data_interval_start: dt.datetime) -> list[StageResult]:
-        ctx: dict[str, DataFrame] = {}
+        ctx: dict = {}
 
         def extract_and_load() -> None:
-            # Cache the fetch result: three actions consume it (write +
-            # two error counts) and mapInPandas would otherwise re-execute
-            # every HTTP call per action — 3× quota and non-deterministic
-            # disagreement between what was written and what was counted.
-            fetched = rest.fetch_locations(self.spark, self.cities, self.fetcher).cache()
-            try:
-                ok, failed = rest.split_errors(fetched)
-                decoded = json_ingest.decode_payloads(ok)
-                obs = json_ingest.extract_observations(
-                    decoded,
-                    data_interval_start,
-                    extracted_at=data_interval_start if self.pin_extracted_at else None,
-                )
-                json_ingest.append_raw(obs, self.raw_path)
-                n_err = failed.count() + json_ingest.error_records(decoded).count()
-                if n_err:
-                    log.warning("%d error records routed to side channel", n_err)
-            finally:
-                fetched.unpersist()
+            # The raw write is the only action: the fetch runs once per city
+            # inside it, and the routed-error count is observed on the same
+            # job (a transport failure's NULL raw_json counts as parse_error).
+            errors = Observation("routed_errors")
+            decoded = json_ingest.decode_payloads(
+                rest.fetch_locations(self.spark, self.cities, self.fetcher)
+            ).observe(errors, F.count_if(json_ingest.error_flag()).alias("n"))
+            obs = json_ingest.extract_observations(
+                decoded,
+                data_interval_start,
+                extracted_at=data_interval_start if self.pin_extracted_at else None,
+            )
+            ctx["raw_schema"] = json_ingest.append_raw(obs, self.raw_path)
+            n_err = errors.get["n"]
+            if n_err:
+                log.warning("%d error records routed to side channel", n_err)
 
         def build_staging() -> None:
             # SERIAL id surrogate (dag :27): Spark has no autoincrement; the
@@ -127,19 +137,21 @@ class WeatherPipeline:
             # which is nondeterministic and blocks predicate pushdown through
             # the projection) lets Catalyst push staging's filters into the
             # scan. One row per (city, interval) by ingest construction.
-            raw = self.spark.read.parquet(self.raw_path).withColumn(
-                "id", F.xxhash64("city", "country", "data_interval_start")
+            raw = (
+                self.spark.read.schema(ctx["raw_schema"])
+                .parquet(self.raw_path)
+                .withColumn("id", F.xxhash64("city", "country", "data_interval_start"))
             )
             ctx["stg"] = staging.stg_weather(raw)
             ctx["stg"].createOrReplaceTempView("stg_weather")
 
         def test_staging() -> None:
-            quality.expect_empty(
-                quality.not_null_violations(ctx["stg"], "city_clean"), "stg.city_clean not_null"
-            )
-            quality.expect_empty(
-                ctx["stg"].filter("temperature < -50 OR temperature > 60"),
-                "stg.temperature range",
+            quality.expect_rules(
+                ctx["stg"],
+                {
+                    "stg.city_clean not_null": "city_clean IS NULL",
+                    "stg.temperature range": "temperature < -50 OR temperature > 60",
+                },
             )
 
         def build_marts() -> None:
@@ -149,21 +161,23 @@ class WeatherPipeline:
             marts.write_mart(ctx["fct"], f"{self.marts_path}/fct_weather_observations")
 
         def test_marts() -> None:
-            dim = self.spark.read.parquet(f"{self.marts_path}/dim_locations")
-            fct = self.spark.read.parquet(f"{self.marts_path}/fct_weather_observations")
+            dim = self.spark.read.schema(ctx["dim"].schema).parquet(
+                f"{self.marts_path}/dim_locations"
+            )
+            fct = self.spark.read.schema(ctx["fct"].schema).parquet(
+                f"{self.marts_path}/fct_weather_observations"
+            )
             quality.expect_empty(
                 quality.unique_violations(dim, "location_key"), "dim.location_key unique"
             )
-            quality.expect_empty(
-                quality.not_null_violations(fct, "location_key"), "fct.location_key not_null"
-            )
-            quality.expect_empty(
-                quality.accepted_values_violations(
-                    fct,
-                    "temperature_category",
-                    ["Freezing", "Cold", "Mild", "Warm", "Hot"],
-                ),
-                "fct.temperature_category accepted_values",
+            quality.expect_rules(
+                fct,
+                {
+                    "fct.location_key not_null": "location_key IS NULL",
+                    "fct.temperature_category accepted_values": (
+                        "temperature_category NOT IN ('Freezing', 'Cold', 'Mild', 'Warm', 'Hot')"
+                    ),
+                },
             )
 
         return run_stages(

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 import pathlib
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -61,7 +62,19 @@ class DailyScheduler:
         done.add(start)
         p = pathlib.Path(self.state_path)
         p.parent.mkdir(parents=True, exist_ok=True)
-        p.write_text(json.dumps({"completed": sorted(s.isoformat() for s in done)}))
+        # write, fsync, then rename: a crash or power loss mid-write leaves
+        # the previous state whole, never a truncated file every later run
+        # would fail to parse; a failed write removes its temp file
+        tmp = p.with_name(p.name + ".tmp")
+        try:
+            with open(tmp, "w") as f:
+                f.write(json.dumps({"completed": sorted(s.isoformat() for s in done)}))
+                f.flush()
+                os.fsync(f.fileno())
+            os.replace(tmp, p)
+        except BaseException:
+            tmp.unlink(missing_ok=True)
+            raise
 
     def tick(self, now: dt.datetime) -> dt.datetime | None:
         """Run the latest complete interval if it hasn't run yet; returns

@@ -47,8 +47,9 @@ def _staged_event_stream(
 
     File streams need a user-declared schema, and declaring the wrong ts
     precision silently corrupts every event time (a µs long divided as ns
-    lands in 1970). Probe the file's batch schema — a driver-side footer
-    read — and stage accordingly: ns generations arrive as bigint and take
+    lands in 1970). Probe the file's batch schema — Spark's parquet schema
+    inference, which runs as a Spark job of its own — and stage
+    accordingly: ns generations arrive as bigint and take
     the integer-div path (ns epochs exceed double's mantissa, so never
     float-divide); µs generations arrive as a native timestamp type."""
     # batch queries self-heal via load_table; the streaming stager builds

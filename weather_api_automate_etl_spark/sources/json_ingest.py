@@ -20,7 +20,8 @@ from __future__ import annotations
 
 import datetime as dt
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from weather_api_automate_etl_spark.schemas import WEATHERSTACK_RESPONSE
 
@@ -84,9 +85,14 @@ def extract_observations(
     )
 
 
+def error_flag() -> Column:
+    """TRUE on a decoded row routed to the bad-record side channel."""
+    return F.col("parse_error") | F.col("api_error")
+
+
 def error_records(decoded: DataFrame) -> DataFrame:
     """The bad-record side channel (parse failures + API error envelopes)."""
-    return decoded.filter(F.col("parse_error") | F.col("api_error")).select(
+    return decoded.filter(error_flag()).select(
         "city",
         "raw_json",
         F.when(F.col("parse_error"), F.lit("parse_error"))
@@ -97,7 +103,7 @@ def error_records(decoded: DataFrame) -> DataFrame:
     )
 
 
-def append_raw(observations: DataFrame, path: str) -> None:
+def append_raw(observations: DataFrame, path: str) -> StructType:
     """Row-append sink (dag :84-112) as one distributed write.
 
     The reference INSERTs row-at-a-time with no dedup; here each batch
@@ -105,11 +111,16 @@ def append_raw(observations: DataFrame, path: str) -> None:
     Across intervals that is append-only (new partition per day), but a
     retried or re-run batch replaces its own partition instead of
     duplicating it — the retry policy (pipeline ops 26-28) requires the
-    sink to be idempotent per interval."""
+    sink to be idempotent per interval.
+
+    Returns the schema of the written frame, partition column included:
+    readers declare it instead of inferring it, which costs a Spark job
+    per read and fails on a table that holds no file yet."""
+    raw = observations.withColumn("ingest_date", F.to_date("data_interval_start"))
     (
-        observations.withColumn("ingest_date", F.to_date("data_interval_start"))
-        .write.mode("overwrite")
+        raw.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("ingest_date")
         .parquet(path)
     )
+    return raw.schema

@@ -61,6 +61,7 @@ import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import NullType, NumericType, StructType
 
 _LEDGER_DIR = "_ledger"
 
@@ -639,6 +640,58 @@ def _resolve(path: str, version: int | None) -> tuple[int, dict]:
     return v, _read_manifest(path, v)
 
 
+def _recorded_schema(m: dict, cols: Sequence[str] | None = None) -> StructType | None:
+    """The manifest's recorded table schema, narrowed to ``cols`` when
+    given; None for a manifest that predates schema recording."""
+    if m.get("schema") is None:
+        return None
+    schema = StructType.fromJson(m["schema"])
+    return schema if cols is None else StructType([schema[c] for c in cols])
+
+
+def _conform(df: DataFrame, m: dict) -> DataFrame:
+    """Cast a write batch's columns to the manifest's recorded types, so
+    every file the ledger writes matches the schema its readers declare
+    (a reader declaring ``int`` over an INT64 file fails). A numeric
+    column (a Python-int batch is bigint) is cast under Spark's
+    store-assignment rule: a value the recorded type cannot hold fails
+    the write instead of wrapping. Any other type change is re-typing,
+    not evolution, and raises. The partition column (never stored in a
+    file) and columns the schema lacks pass through; no Spark job runs."""
+    recorded = _recorded_schema(m)
+    if recorded is None:
+        return df
+    want = {f.name: f.dataType for f in recorded.fields}
+    drift = {
+        f.name: f.dataType
+        for f in df.schema.fields
+        if f.name != m["partition_col"]
+        and f.name in want
+        and f.dataType != want[f.name]
+    }
+    if not drift:
+        return df
+    for c, have in drift.items():
+        if not (
+            isinstance(have, NullType)
+            or isinstance(have, NumericType) and isinstance(want[c], NumericType)
+        ):
+            raise ValueError(
+                f"schema evolution is additive only: batch would re-type "
+                f"column {c!r} from {want[c].simpleString()} to "
+                f"{have.simpleString()}"
+            )
+
+    def fit(c: str) -> F.Column:
+        cast = F.col(c).try_cast(want[c])
+        overflow = F.raise_error(
+            F.lit(f"column {c!r}: {want[c].simpleString()} cannot hold a batch value")
+        )
+        return F.when(F.col(c).isNotNull() & cast.isNull(), overflow).otherwise(cast).alias(c)
+
+    return df.select(*[fit(c) if c in drift else F.col(c) for c in df.columns])
+
+
 def _read_dirset(
     spark: SparkSession,
     path: str,
@@ -652,10 +705,12 @@ def _read_dirset(
     """Plan a read of ``pvals`` from a pv→{dir, dirname} pointer map —
     used for both data entries and their deletion-vector sidecars.
 
-    ``target_schema`` (a StructType) aligns each directory group to the
-    manifest's recorded schema: columns a pre-evolution writer never
-    knew about materialize as typed NULLs — the additive-evolution read
-    contract (see ledger_merge's ``merge_schema``)."""
+    ``target_schema`` (a StructType, the manifest's recorded schema) is
+    declared to the reader, so no Spark job infers it from a footer, and
+    columns a pre-evolution writer never knew about read back as typed
+    NULLs — the additive-evolution read contract (see ledger_merge's
+    ``merge_schema``). Without it (a manifest that predates schema
+    recording) the reader infers."""
     by_dir: dict[str, list[str]] = {}
     for pv in pvals:
         by_dir.setdefault(entry_of[pv]["dir"], []).append(pv)
@@ -670,21 +725,14 @@ def _read_dirset(
                 targets += [os.path.join(pdir, fn) for fn in sorted(files[pv])]
             else:
                 targets.append(pdir)
-        p = spark.read.option("basePath", base).parquet(*targets)
-        if target_schema is not None:
-            have = set(p.columns)
-            p = p.select(
-                *[
-                    F.col(f.name)
-                    if f.name in have
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in target_schema.fields
-                ]
-            )
-        parts.append(p)
+        reader = spark.read if target_schema is None else spark.read.schema(target_schema)
+        parts.append(reader.option("basePath", base).parquet(*targets))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
+    if target_schema is not None:
+        # the reader appends the partition column; restore the recorded order
+        out = out.select(*target_schema.fieldNames())
     return out.withColumn(pcol, F.col(pcol).cast(pdtype))
 
 
@@ -708,22 +756,15 @@ def _read_partitions(
     tombstone sidecars; DV-free partitions union in untouched, so the
     merge-on-read tax is scoped to exactly the partitions that owe it."""
     pcol = m["partition_col"]
+    target = _recorded_schema(m)
     if not pvals:
-        schema = m.get("schema")
-        if schema is None:
+        if target is None:
             raise ValueError(
                 "ledger snapshot has no partitions and the manifest "
                 "predates schema recording — cannot type an empty frame"
             )
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame([], StructType.fromJson(schema))
+        return spark.createDataFrame([], target)
     pdtype = m["partition_dtype"]
-    target = None
-    if m.get("schema") is not None:
-        from pyspark.sql.types import StructType
-
-        target = StructType.fromJson(m["schema"])
     plain = [pv for pv in pvals if not m["partitions"][pv].get("dv")]
     dv_pvals = [pv for pv in pvals if m["partitions"][pv].get("dv")]
     out = (
@@ -743,6 +784,7 @@ def _read_partitions(
         tombstones = _read_dirset(
             spark, path, pcol, pdtype,
             {pv: m["partitions"][pv]["dv"] for pv in dv_pvals}, dv_pvals,
+            target_schema=_recorded_schema(m, (dv_key, pcol)),
         ).select(dv_key, pcol)
         live = data.join(tombstones, [dv_key, pcol], "left_anti")
         out = live if out is None else out.unionByName(live)
@@ -904,7 +946,8 @@ def ledger_merge(
     their old files and materialize the columns as NULLs at READ time
     from the manifest schema (no rewrite anywhere — the Delta/Iceberg
     additive-evolution contract). Dropping or re-typing a column is not
-    evolution and raises."""
+    evolution and raises; a numeric column of another width is cast to
+    the recorded type (see ``_conform``)."""
     from weather_api_automate_etl_spark.operators.cdc import merge_into
 
     v, m = _resolve(path, None)
@@ -936,6 +979,7 @@ def ledger_merge(
                 f"schema evolution is additive only: update batch is "
                 f"missing existing columns {missing}"
             )
+    updates = _conform(updates, m)
     _enforce_checks(updates, m.get("checks"))
     touched = [
         r["__pv"]
@@ -1004,7 +1048,8 @@ def ledger_replace_partitions(
     ``txn=(app_id, txn_id)`` applies the same exactly-once watermark as
     ledger_merge: a replay whose txn_id is not newer than the recorded
     watermark returns the current version without writing anything.
-    Returns the committed version."""
+    ``df``'s columns are cast to the recorded types as in ledger_merge
+    (see ``_conform``). Returns the committed version."""
     v, m = _resolve(path, None)
     if txn is not None and txn[1] <= m.get("txn", {}).get(txn[0], -1):
         return v  # transaction already applied: replay is a pure no-op
@@ -1020,6 +1065,7 @@ def ledger_replace_partitions(
             f"replacement frame carries partition values outside the "
             f"declared scope: {out_of_scope[:10]}"
         )
+    df = _conform(df, m)
     _enforce_checks(df, m.get("checks"))
     entries = _write_data_dir(
         df, path, pcol, m.get("stats_cols", []), m.get("key_index"),
@@ -1483,6 +1529,7 @@ def ledger_delete(
                     spark, path, pcol, m["partition_dtype"],
                     {pv: m["partitions"][pv]["dv"] for pv in prior_dv},
                     prior_dv,
+                    target_schema=_recorded_schema(m, (key, pcol)),
                 ).select(key, pcol)
             )
         dv_entries = _write_data_dir(

@@ -90,14 +90,18 @@ def fetch_locations(
     Transport-level failures are captured per row (the reference's per-city
     try/except, dag :115-116) instead of failing the job — error routing is
     a filter downstream, never a crash."""
+    import pandas as pd
+
     cities = cities if cities is not None else DEFAULT_CITIES
-    cities_df = spark.createDataFrame([(c,) for c in cities], "city string")
+    # a pandas frame becomes an Arrow local relation; a Python list would
+    # first be pickled through a Python worker
+    cities_df = spark.createDataFrame(
+        pd.DataFrame({"city": pd.Series(cities, dtype=object)}), "city string"
+    )
     if parallelism:
         cities_df = cities_df.repartition(parallelism)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
-        import pandas as pd
-
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             raws, errs = [], []
             for city in pdf["city"]:
