@@ -28,6 +28,11 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+# spread_if_narrow: the LSH/centroid joins below carry the per-candidate
+# cosine arithmetic in the STREAM side's scan stage (broadcast join, no
+# exchange of the corpus), and every consumer statistic (cosine per row,
+# row_number with a full (score, id) tie-break) is partitioning-insensitive
+from weather_api_automate_etl_spark.functions.layout import spread_if_narrow
 from weather_api_automate_etl_spark.functions.vectors import (
     cosine_similarity,
     cosine_similarity_sql,
@@ -393,30 +398,6 @@ def _hyperplane(plane: int, dim: int) -> list[float]:
     return [c / norm for c in comps]
 
 
-def _spread_narrow(df: DataFrame) -> DataFrame:
-    """Round-robin-spread a frame whose Catalyst size estimate says it
-    arrives in fewer scan splits than the session has cores (est <
-    parallelism × 128 MB default split) — the LSH joins below carry the
-    per-candidate cosine arithmetic in the STREAM side's scan stage
-    (broadcast join, no exchange of the corpus), so on a single-row-group
-    file the whole verify pass runs in one task (measured at sf0.1:
-    q_hard_negatives 2.37 s serial vs 0.80 s spread, 32 cores). Uses the
-    ~15 ms ``optimizedPlan().stats()`` estimate, never
-    ``rdd.getNumPartitions()`` (compiles the physical plan — the
-    round-13 corpus-pipeline regression); the ≥2^60 sentinel of
-    un-sizable sources reads as wide (leave alone). On a real multi-file
-    layout the scan already arrives with ≥ cores splits and this is a
-    no-op. Round-robin is retry-safe (sortBeforeRepartition) and every
-    consumer statistic — cosine per row, row_number with a full
-    (score, id) tie-break — is partitioning-insensitive."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if est >= (1 << 60) or est >= par * (128 << 20):
-        return df
-    return df.repartition(par)
-
-
 def knn_join(
     corpus: DataFrame,
     probes: DataFrame,
@@ -450,7 +431,7 @@ def knn_join(
     # (id, bucket) projection would be a corpus-wide self-join on the id,
     # which stops being broadcastable the moment the corpus is big
     bucket = lsh_bucket_expr(vec_col, dim, n_planes)
-    c = _spread_narrow(
+    c = spread_if_narrow(
         corpus.select(
             F.col(id_col), F.col(vec_col).alias("_cvec"), bucket.alias("bucket")
         )
@@ -498,7 +479,7 @@ def hard_negative_pairs(
     from pyspark.sql.window import Window
 
     bucket = lsh_bucket_expr(vec_col, dim, n_planes)
-    a = _spread_narrow(
+    a = spread_if_narrow(
         df.select(
             F.col(id_col).alias("anchor_id"),
             F.col(label_col).alias("_albl"),
@@ -549,7 +530,7 @@ def nearest_centroid(
     centroid id. Returns (id, list_id, score)."""
     from pyspark.sql.window import Window
 
-    scored = _spread_narrow(
+    scored = spread_if_narrow(
         df.select(F.col(id_col), F.col(vec_col).alias("_v"))
     ).crossJoin(
         F.broadcast(centroids.select("list_id", "centroid"))
@@ -620,7 +601,7 @@ def ann_recall(
     # would shuffle the whole corpus for a pruned read (A/B'd: spreading
     # both sides read 1.58 -> 1.91 s on q_ann_recall; exact-only wins)
     exact = _topk(
-        _spread_narrow(corp).crossJoin(F.broadcast(q)).select(
+        spread_if_narrow(corp).crossJoin(F.broadcast(q)).select(
             "__qid",
             id_col,
             F.round(cosine_similarity(F.col(vec_col), F.col("__qv")), 6).alias(
@@ -1031,7 +1012,7 @@ def mrr_at_k(
         F.col(vec_col).alias("__qe"),
         F.col(label_col).alias("__qlabel"),
     )
-    c = _spread_narrow(
+    c = spread_if_narrow(
         df.filter(~F.col(id_col).isin(ids)).select(
             F.col(id_col).alias("__cid"),
             F.col(vec_col).alias("__ce"),

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from weather_api_automate_etl_spark.functions.layout import spread_if_narrow
+
 
 def mad_robust_z(
     df: DataFrame,
@@ -1563,19 +1565,12 @@ def ridge_regression_2f(
         raise ValueError(f"ridge needs lam >= 0, got {lam}")
     d = lambda c: F.col(c).cast("decimal(18,6)")  # noqa: E731
     x1, x2, y = d(x1_col), d(x2_col), d(y_col)
-    # Parallelism guard (the similarity._spread_narrow idiom, guide §2):
-    # the nine DECIMAL sufficient statistics are 10-50x costlier per row
-    # than a double sum, and on a single-row-group scan the whole
-    # map-side combine runs in ONE task (measured at sf0.1: 1.85 s
-    # serial vs 1.25 s spread). Decimal sums are associative, so the
-    # redistribution is exactly result-preserving; a real multi-file
-    # layout arrives wide and skips this.
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    src = df.select(group_col, y_col, x1_col, x2_col)
-    est = int(src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if est < (1 << 60) and est < par * (128 << 20):
-        src = src.repartition(par)
+    # Parallelism guard: the nine DECIMAL sufficient statistics are
+    # 10-50x costlier per row than a double sum, and on a single-row-group
+    # scan the whole map-side combine runs in ONE task (measured at sf0.1:
+    # 1.85 s serial vs 1.25 s spread). Decimal sums are associative, so the
+    # redistribution is exactly result-preserving.
+    src = spread_if_narrow(df.select(group_col, y_col, x1_col, x2_col))
     g = (
         src.groupBy(F.col(group_col).alias("g"))
         .agg(

@@ -30,7 +30,8 @@ _TOKENS_SQL = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 #: declared schema of the staged events stream, modulo the ts type — the
 #: fixture has shipped ts as TIMESTAMP(NANOS) (a raw ns-epoch long under
 #: nanosAsLong) in some generations and TIMESTAMP(MICROS) in others, so the
-#: stager probes the file instead of hard-coding either precision.
+#: stager takes ts's type from the file's cached batch schema
+#: (tables.read_fixture) instead of hard-coding either precision.
 _EVENT_STREAM_SCHEMA_FMT = (
     "event_id long, ts {ts_type}, user_id long, event_type string, "
     "value double, props string"
@@ -47,23 +48,23 @@ def _staged_event_stream(
 
     File streams need a user-declared schema, and declaring the wrong ts
     precision silently corrupts every event time (a µs long divided as ns
-    lands in 1970). Probe the file's batch schema — Spark's parquet schema
-    inference, which runs as a Spark job of its own — and stage
-    accordingly: ns generations arrive as bigint and take
-    the integer-div path (ns epochs exceed double's mantissa, so never
-    float-divide); µs generations arrive as a native timestamp type."""
+    lands in 1970). Take ts's type from the file's batch schema, which
+    ``tables.read_fixture`` infers once per process (a Spark job on the
+    first read of the file only), and stage accordingly: ns generations
+    arrive as bigint and take the integer-div path (ns epochs exceed
+    double's mantissa, so never float-divide); µs generations arrive as a
+    native timestamp type. The schema is resolved before the stage dir
+    exists, so a missing or unreadable file leaves nothing behind."""
     # batch queries self-heal via load_table; the streaming stager builds
-    # its own source, so heal here too — otherwise a non-UTC driver session
-    # shifts every instant→ntz window/session boundary by the tz offset
-    from weather_api_automate_etl_spark.sources.tables import _ensure_engine_confs
+    # its own source, so heal here too (read_fixture sets the engine confs)
+    # — otherwise a non-UTC caller session shifts every instant→ntz
+    # window/session boundary by the tz offset
+    from weather_api_automate_etl_spark.sources.tables import read_fixture
 
-    _ensure_engine_confs(spark)
+    batch_ts = dict(read_fixture(spark, f"{sf_dir}/events.parquet").dtypes)["ts"]
     stage_dir = tempfile.mkdtemp(prefix=f"{prefix}_")
     for i in range(copies):
         os.symlink(f"{sf_dir}/events.parquet", f"{stage_dir}/events_{i}.parquet")
-    batch_ts = dict(
-        spark.read.parquet(f"{stage_dir}/events_0.parquet").dtypes
-    )["ts"]
     if batch_ts == "bigint":
         stream = (
             spark.readStream.schema(_EVENT_STREAM_SCHEMA_FMT.format(ts_type="long"))
