@@ -52,7 +52,7 @@ def test_priority_order_names_are_registered():
     name is silently skipped by _ordered_registry, which would quietly
     shift the verification window (the round-3 advice finding). Names
     retired via the documented displacement ledger (DISPLACED) are the
-    one exception: the historical window-head tuples stay verbatim."""
+    one exception: their rows stay in the evidence files."""
     from weather_api_automate_etl_spark.queries import DISPLACED, PRIORITY_ORDER
 
     dangling = [
@@ -62,9 +62,9 @@ def test_priority_order_names_are_registered():
     ghosts = set(DISPLACED) & set(REGISTRY)
     assert not ghosts, f"DISPLACED queries still registered: {ghosts}"
     # a displaced name must not occupy a slot in the CURRENT window
-    from weather_api_automate_etl_spark.queries import ROUND12_WINDOW_HEAD
+    from weather_api_automate_etl_spark.queries import queries
 
-    assert not set(DISPLACED) & set(ROUND12_WINDOW_HEAD)
+    assert not set(DISPLACED) & set(list(queries())[:50])
 
 
 def _driver_verified() -> set[str]:
@@ -90,40 +90,42 @@ def _driver_verified() -> set[str]:
     return verified
 
 
-def _last_verified_round() -> dict[str, int]:
+def _last_green_slot() -> dict[str, tuple[int, int]]:
     """Map each query to the LAST round whose CORRECTNESS file recorded a
-    green row for it — the staleness metric the rotation plan runs on."""
+    green row for it, and its index in that round's sample — the
+    staleness metric the rotation runs on."""
     import json
     from pathlib import Path
 
     root = Path(__file__).resolve().parent.parent
-    last: dict[str, int] = {}
+    last: dict[str, tuple[int, int]] = {}
     for p in sorted(root.glob("CORRECTNESS_r*.json")):
         rnd = int(p.stem.split("_r")[1])
-        for name, row in json.loads(p.read_text()).items():
+        for i, (name, row) in enumerate(json.loads(p.read_text()).items()):
             if row.get("rows_match") and row.get("schema_match"):
-                last[name] = max(last.get(name, 0), rnd)
+                last[name] = max(last.get(name, (0, 0)), (rnd, i))
     return last
+
+
+def _stalest_first() -> list[str]:
+    """The registry in rotation order, computed here from the evidence
+    files: last green round ascending (never green counts as round 0),
+    ties by sample order within that round's file, then registration
+    order."""
+    slot = _last_green_slot()
+    reg = list(REGISTRY)
+    return sorted(reg, key=lambda n: (*slot.get(n, (0, 0)), reg.index(n)))
 
 
 def test_priority_prefix_covers_every_family():
     """External verification records exactly the first 50 registry entries
     per round; round 11 drove the never-driver-sampled set to ZERO, so
-    from round 12 on the window is pure rotation. Pin round 12's evidence
-    strategy, executed exactly as staged last round (round-11 verdict
-    item 1): the window is the committed ROUND12_PENDING schedule
-    verbatim — the 38 remaining r5-era rows + the 12-name r6-era cohort
-    head. Everything outside the window already holds a green driver row,
-    and the stalest of those rows are explicitly queued in the committed
-    ROUND13_PENDING schedule."""
-    from weather_api_automate_etl_spark.queries import (
-        R5_ERA_STALE,
-        R6_ERA_HEAD,
-        ROUND12_PENDING,
-        ROUND12_WINDOW_HEAD,
-        ROUND13_PENDING,
-        queries,
-    )
+    from round 12 on the window is pure rotation. The window is the 50
+    registered queries with the stalest green driver rows and slots
+    51-100 the next 50, both computed here from the CORRECTNESS files,
+    so every round's evidence advances the rotation by itself.
+    Everything outside the window already holds a green driver row."""
+    from weather_api_automate_etl_spark.queries import queries
 
     q = queries()
     assert len(q) == len(REGISTRY), "ordering must not drop registered queries"
@@ -134,18 +136,13 @@ def test_priority_prefix_covers_every_family():
         "round 11 drove the never-driver-sampled set to zero; it must "
         f"stay zero: {unverified}"
     )
-    k = len(ROUND12_WINDOW_HEAD)
-    assert k == 50, "the driver records exactly the first 50 entries"
-    assert names[:k] == list(ROUND12_WINDOW_HEAD)
-    assert ROUND12_WINDOW_HEAD == R5_ERA_STALE[3:] + R6_ERA_HEAD, (
-        "round 12's window is exactly the staged schedule: the 38 "
-        "remaining r5-era rows + the r6-era cohort head (round-11 "
-        "verdict item 1)"
+    expected = _stalest_first()
+    assert names[:50] == expected[:50], (
+        "the window must be the 50 stalest registered queries"
     )
-    assert names[50:100] == list(ROUND13_PENDING) and len(ROUND13_PENDING) == 50, (
-        "round 13's committed schedule must hold slots 51-100"
+    assert names[50:100] == expected[50:100], (
+        "slots 51-100 must be the next 50 stalest registered queries"
     )
-    assert not set(ROUND12_PENDING) & set(ROUND13_PENDING)
     # every registered query carries a DuckDB oracle (no no_oracle rows
     # since the round-9 portable-HLL / zlib-lookup upgrades).
     from weather_api_automate_etl_spark.queries import oracle_sql
@@ -156,29 +153,44 @@ def test_priority_prefix_covers_every_family():
     )
     # Staleness guard — the HONEST bound. With 327 queries and a 50-slot
     # window the full cycle is ceil(327/50) = 7 rounds, so "≤4 rounds
-    # stale" is impossible registry-wide. What the committed schedule
-    # guarantees: a row last verified in round r exceeds 7 rounds at the
-    # close of round r+8, so with evidence through round N every row
-    # with r <= N-6 must already sit in the current or committed-next
-    # window (it re-verifies within two rounds, before the bound trips).
-    last = _last_verified_round()
+    # stale" is impossible registry-wide. What the rotation guarantees:
+    # a row last verified in round r exceeds 7 rounds at the close of
+    # round r+8, so with evidence through round N every registered row
+    # with r <= N-6 must already sit in the current or next window (it
+    # re-verifies within two rounds, before the bound trips). Displaced
+    # names hold no slot, so they are not counted.
+    last = {n: r for n, (r, _) in _last_green_slot().items()}
     n_max = max(last.values())  # latest recorded round
-    overdue = {n for n, r in last.items() if r <= n_max - 6}
-    scheduled = set(ROUND12_WINDOW_HEAD) | set(ROUND13_PENDING)
-    assert overdue <= scheduled, (
+    overdue = {n for n, r in last.items() if r <= n_max - 6 and n in REGISTRY}
+    assert overdue <= set(names[:100]), (
         f"rows about to exceed the 7-round freshness bound are unscheduled: "
-        f"{overdue - scheduled}"
+        f"{overdue - set(names[:100])}"
     )
-    prefix = names[:50]
-    tags_in_prefix = {tag for name in prefix for tag in REGISTRY[name].tags}
-    # the round-12 window spans the r5-era corpus/embedding/streaming
-    # cohort and the r6-era changepoint/analytics head. Multimodal and
-    # the §2 ingest backbone hold r11 rows (the freshest possible) so
-    # they take no slots this round.
-    for family in ("corpus", "streaming", "text", "quality", "dedup"):
-        assert family in tags_in_prefix, f"family {family!r} missing from prefix"
     # everything outside the window must already be driver-verified
     outside = set(names[50:]) - verified
     assert not outside, (
         f"queries outside the window lack prior driver rows: {outside}"
     )
+
+
+def test_window_order_is_derived_from_evidence(monkeypatch, tmp_path):
+    """The rotation rule on a small registry: a registered query with no
+    green row leads the window (never-green counts as round 0), a
+    displaced name never reaches queries(), and an evidence file of the
+    wrong shape raises instead of reordering the window."""
+    from weather_api_automate_etl_spark import queries as qmod
+
+    green = [n for n in qmod.PRIORITY_ORDER if n in REGISTRY]
+    fresh, stale = green[-1], green[0]
+    spec = REGISTRY[fresh]
+    small = {fresh: spec, "q_new_a": spec, stale: spec, "q_new_b": spec}
+    assert "q_compression_fixed" in qmod.PRIORITY_ORDER
+    assert "q_compression_fixed" in qmod.DISPLACED
+    monkeypatch.setattr(qmod, "REGISTRY", small)
+    assert list(qmod.queries()) == ["q_new_a", "q_new_b", stale, fresh]
+    # with no evidence the order is registration order
+    monkeypatch.setattr(qmod, "PRIORITY_ORDER", qmod._stalest_first(tmp_path))
+    assert list(qmod.queries()) == list(small)
+    (tmp_path / "CORRECTNESS_r01.json").write_text('{"q_a": {}}')
+    with pytest.raises(ValueError, match="malformed"):
+        qmod._stalest_first(tmp_path)

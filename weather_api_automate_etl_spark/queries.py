@@ -24,8 +24,10 @@ Conventions that keep the hash comparison exact:
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -556,157 +558,44 @@ def _load_extensions() -> None:
         importlib.import_module(f"{__package__}.{p.stem}")
 
 
-# Priority order for the registry as exposed to the driver. External
-# verification records exactly the first 50 registry entries per round, so
-# window placement is evidence strategy: the union of per-round CORRECTNESS
-# files should converge on the whole registry and no green row should turn
-# more than ~7 rounds stale (ceil(327/50) — the honest steady-state bound;
-# see ROUND12_PENDING below). Anything registered but unlisted is appended in
-# registration order (new queries are never silently dropped);
-# test_queries_registry asserts every listed name is registered, that the
-# head is exactly the prefix, and that nothing unverified sits outside the
-# head except the committed forward schedule.
+# Priority order for the registry as exposed to the driver. The driver
+# verifies the first 50 entries per round and records them, in sample order,
+# as the keys of CORRECTNESS_rNN.json. The order is derived from those files:
+# ascending by the last round with a green row (rows_match and schema_match),
+# never-green counting as round 0; ties by sample order within that round's
+# file, then by registration order. Each window is thus the 50 stalest
+# registered queries, so with 327 queries a green row is re-checked within
+# ceil(327/50) = 7 rounds. With no evidence files: registration order.
+_EVIDENCE_DIR = Path(__file__).resolve().parent.parent
 
 
-def _recorded_window(round_no: int) -> tuple[str, ...]:
-    """The exact 50-name window a past round's driver run recorded, read
-    from the committed CORRECTNESS file (which preserves sample order) —
-    the file IS the audit trail, so the historical window heads are no
-    longer duplicated here as literal tuples (round-10 consolidation;
-    the round-8/7 window rationales live in the git history of this
-    block and in PARITY.md). The dict's KEY INSERTION ORDER is
-    load-bearing — it preserves the driver's sample order — so a present
-    file that fails the shape checks raises instead of silently
-    reordering downstream windows (round-10 advice)."""
-    import json
-    from pathlib import Path
-
-    p = (
-        Path(__file__).resolve().parent.parent
-        / f"CORRECTNESS_r{round_no:02d}.json"
-    )
-    try:
-        names = tuple(json.loads(p.read_text()))
-    except OSError:
-        # packaged without the repo-root evidence files: these heads
-        # only refine ordering PAST the 50-slot window (the current
-        # window is a literal schedule), so degrade instead of failing
-        return ()
-    if len(names) != 50 or not all(n.startswith("q_") for n in names):
-        raise ValueError(f"malformed driver-evidence file {p.name}")
-    return names
+def _stalest_first(root: Path = _EVIDENCE_DIR) -> tuple[str, ...]:
+    """Every name with a green driver row, stalest first. A present file
+    of the wrong shape raises: its key order is the sample order, so a
+    damaged file must not silently reorder the window."""
+    files = {
+        int(p.stem.removeprefix("CORRECTNESS_r")): p
+        for p in root.glob("CORRECTNESS_r*.json")
+    }
+    last: dict[str, tuple[int, int]] = {}
+    for rnd in sorted(files):
+        rows = json.loads(files[rnd].read_text())
+        if not isinstance(rows, dict) or len(rows) != 50 or not all(
+            n.startswith("q_") for n in rows
+        ):
+            raise ValueError(f"malformed driver-evidence file {files[rnd].name}")
+        for i, (name, row) in enumerate(rows.items()):
+            if row.get("rows_match") and row.get("schema_match"):
+                last[name] = (rnd, i)
+    return tuple(sorted(last, key=last.get))
 
 
-ROUND8_WINDOW_HEAD: tuple[str, ...] = _recorded_window(8)
-ROUND7_WINDOW_HEAD: tuple[str, ...] = _recorded_window(7)
+#: May hold names retired from the registry (DISPLACED), which
+#: _ordered_registry skips.
+PRIORITY_ORDER: tuple[str, ...] = _stalest_first()
 
-#: The round-7 hand-off, absorbed into ROUND8_WINDOW_HEAD as its first
-#: ten entries (PARITY.md narrates the hand-off mechanism by name).
-ROUND8_PENDING: tuple[str, ...] = ROUND8_WINDOW_HEAD[:10]
-
-#: The round-8 hand-off ledger: round-8 additions landed here
-#: local-oracle green and opened round 9's 50-slot window (its exact
-#: composition is now read from CORRECTNESS_r09.json above); the 40-name
-#: tail below plus the 22 r4-era stale rows (R4_ERA_STALE, further down)
-#: fill rounds 10-11 per the committed schedule.
-#: The 40 names past round 9's 50-slot window (waves 20-39, in
-#: registration order). Kept LITERAL — the current rotation windows
-#: slice from here, so they must not depend on the evidence files
-#: being present in a packaged deployment.
-ROUND9_TAIL: tuple[str, ...] = (
-    "q_kaplan_meier", "q_benford", "q_org_hierarchy",
-    "q_skyline_2d", "q_dynamic_partition_pruning", "q_csv_error_routing",
-    "q_link_prediction", "q_hits", "q_wilcoxon",
-    "q_weighted_quantile", "q_kneser_ney", "q_clustering_coeff",
-    "q_logrank", "q_t_closeness", "q_ridge_normal_eq",
-    "q_mann_kendall", "q_attribution_linear", "q_theil_sen",
-    "q_rrf_fusion", "q_ndcg", "q_orc_roundtrip",
-    "q_mrr", "q_anova_oneway", "q_holt_winters",
-    "q_textrank", "q_paired_t", "q_decision_stump",
-    "q_backtest_naive", "q_impute_median", "q_bh_fdr",
-    "q_streaks", "q_control_chart", "q_rare_collapse",
-    "q_drift_sweep_fdr", "q_srm_check", "q_lag_features",
-    "q_quality_suite", "q_trimmed_mean", "q_minmax_scale",
-    "q_ordinal_encode",
-)
-
-#: Round-9 window: exactly the first 50 ROUND9_PENDING entries, in
-#: registration order (waves 13-20 through q_als_factors). Every one of
-#: these 90 pending names is local-oracle green at all three SFs but has
-#: never appeared in a driver CORRECTNESS sample (r01-r08 record only the
-#: 50-entry prefix per round); rotating them into the window converts
-#: them from repo-claimed to driver-proven — the round-8 verdict's #1
-#: item. No §2 re-verification slots this round: every §2 backbone query
-#: holds an r07/r08 green row (the freshest possible), so the whole
-#: window goes to never-checked names.
-#: head 50 = the committed CORRECTNESS_r09.json sample, in order
-ROUND9_PENDING: tuple[str, ...] = _recorded_window(9) + ROUND9_TAIL
-ROUND9_WINDOW_HEAD: tuple[str, ...] = _recorded_window(9)
-
-#: Round-10 rotation schedule, committed now (round-8 verdict item 2) so
-#: no query's latest green row turns 4+ rounds stale. With round 9's 34
-#: ROUND10_NEW entries (below) taking the window head, round 10's 50
-#: slots are: 34 ROUND10_NEW + the first 16 of the ROUND9_PENDING tail
-#: (q_kaplan_meier .., waves 20+ in registration order). Round 11 then
-#: takes the remaining 24 pending-tail names (through q_ordinal_encode),
-#: the 22 r4-era stale rows (q_array_agg, q_asof_join, q_decontaminate,
-#: q_dedup_incremental, q_group_centroids, q_interval_join,
-#: q_length_hist, q_mixture_sample, q_multimodal_decode_png,
-#: q_multimodal_decode_wav, q_multimodal_video_frames, q_pack_assign,
-#: q_pii_redact, q_quality_gate, q_range_join, q_salted_join,
-#: q_snapshot_diff, q_sql_interface, q_top_revenue, q_topn_per_group,
-#: q_unigram_logprob, q_winsorize), and the r5 cohort head.
-#: Queries added during round 9 land in ROUND10_NEW below and take the
-#: head of round 10's window ahead of the tail (they are the only
-#: never-verified names outside this round's head).
-ROUND10_NEW: tuple[str, ...] = (
-    # the two round-9 oracle upgrades (portable md5-HLL profile;
-    # precomputed zlib lookup) queued for their first triple-green
-    # driver rows, then the wave 40-58 additions in registration order
-    # (classifier evaluation, intervals, matching, rank tests, drift,
-    # contracts, funnel/cohort analytics, corpus health)
-    "q_profile_table_approx", "q_compression_ratio", "q_multimodal_decode_interlaced",
-    "q_roc_auc", "q_pr_sweep", "q_interval_coalesce",
-    "q_cross_corr", "q_jl_project", "q_brier_decomposition",
-    "q_caliper_match", "q_kruskal_wallis", "q_attribution_decay",
-    "q_lsh_recall", "q_reshard_stability", "q_embedding_drift",
-    "q_conformal", "q_good_turing", "q_test_functional_dep",
-    "q_test_monotonic", "q_cuped", "q_median_ci",
-    "q_mcnemar", "q_cohens_kappa", "q_youden_cutoff",
-    "q_gains_table", "q_rolling_actives", "q_new_vs_returning",
-    "q_daily_percentiles", "q_stickiness", "q_cohort_ltv",
-    "q_time_to_convert", "q_mde", "q_dup_rate_by_source",
-    "q_heaps_law",
-)
-
-ROUND10_PENDING: tuple[str, ...] = ROUND10_NEW + ROUND9_TAIL
-
-#: Round-10 window, executed exactly as staged last round (round-9
-#: verdict item 1): the 34 ROUND10_NEW names take the head, the first
-#: 16 tail names (q_kaplan_meier .. q_mann_kendall) fill slots 35-50.
-#: Every name is never-driver-sampled: a green round-10 row shrinks the
-#: never-sampled set from 72 to 22.
-ROUND10_WINDOW_HEAD: tuple[str, ...] = ROUND10_NEW + ROUND9_TAIL[:16]
-
-#: The 22 r4-era rows — the stalest green driver evidence (6 rounds old
-#: by round 10's close). They re-verify in round 11 per the committed
-#: schedule below.
-R4_ERA_STALE: tuple[str, ...] = (
-    "q_array_agg", "q_asof_join", "q_decontaminate",
-    "q_dedup_incremental", "q_group_centroids", "q_interval_join",
-    "q_length_hist", "q_mixture_sample", "q_multimodal_decode_png",
-    "q_multimodal_decode_wav", "q_multimodal_video_frames", "q_pack_assign",
-    "q_pii_redact", "q_quality_gate", "q_range_join",
-    "q_salted_join", "q_snapshot_diff", "q_sql_interface",
-    "q_top_revenue", "q_topn_per_group", "q_unigram_logprob",
-    "q_winsorize",
-)
-
-#: Queries DISPLACED from the registry (round-9 verdict item 5: a new
-#: operator must displace a weaker one and delete equivalent LoC). The
-#: historical window-head tuples above stay verbatim — the audit trail —
-#: so the registry tests filter through this map instead of rewriting
-#: them. name -> why it was safe to retire.
+#: Queries DISPLACED from the registry by a stronger operator; their rows
+#: stay in the evidence files. name -> why it was safe to retire.
 DISPLACED: dict[str, str] = {
     "q_compression_fixed": (
         "round 10, displaced by q_multimodal_decode_progressive: it was "
@@ -717,153 +606,14 @@ DISPLACED: dict[str, str] = {
     ),
 }
 
-#: Queries added during round 10 land here local-oracle green and open
-#: round 11's window ahead of the rotation tail (they are the only
-#: never-verified names outside round 10's head).
-ROUND11_NEW: tuple[str, ...] = (
-    # round-10 addition, wave 59: progressive (spectral-selection) JPEG
-    # decode — the last documented codec plug seam (round-9 verdict
-    # item 7)
-    "q_multimodal_decode_progressive",
-)
-
-#: Round-11 rotation schedule, committed in round 10 (round-9 verdict
-#: item 6): round-10
-#: additions first, then the remaining 24 never-sampled ROUND9_PENDING
-#: tail names (q_attribution_linear .. q_ordinal_encode, waves 28-39),
-#: then the 22 r4-era stale rows above. That fills 47+ of round 11's 50
-#: slots; the balance comes from the r5-era cohort head (oldest driver
-#: rows after the r4 set re-verifies), taken in CORRECTNESS_r05 order.
-ROUND11_PENDING: tuple[str, ...] = ROUND11_NEW + ROUND9_TAIL[16:] + R4_ERA_STALE
-
-#: The 41 r5-era rows (latest green driver evidence = round 5), in
-#: CORRECTNESS_r05 sample order. Kept LITERAL — the rotation windows
-#: slice from here, so they must not depend on the evidence files being
-#: present in a packaged deployment. The head 3 complete round 11's
-#: window; the remaining 38 open round 12's.
-R5_ERA_STALE: tuple[str, ...] = (
-    "q_approx_stats", "q_sketch_union", "q_multimodal_decode_jpeg",
-    "q_streaming_file_sink", "q_streaming_dedup_sink", "q_dup_span_removal",
-    "q_tfidf_top_terms", "q_token_entropy", "q_semdedup_survivors",
-    "q_train_shuffle", "q_embedding_quantize", "q_embedding_standardize",
-    "q_ann_ivf_bucketed", "q_intradoc_repeats", "q_curriculum_order",
-    "q_corpus_pipeline", "q_neardup_cosine_vectorized", "q_streaming_corpus_clean",
-    "q_holdout_split", "q_hashing_vectorizer", "q_heavy_hitters",
-    "q_pmi_pairs", "q_ewma", "q_anomaly_iqr",
-    "q_ntile_bucket", "q_linreg_by_group", "q_triangle_count",
-    "q_pack_sequences", "q_cms_frequency", "q_bigram_logprob",
-    "q_mad_outliers", "q_autocorr", "q_quantile_normalize",
-    "q_blocklist_filter", "q_basket_pairs", "q_rfm_segments",
-    "q_embedding_covariance", "q_label_propagation", "q_trailing_median",
-    "q_seasonal_baseline", "q_concurrency",
-)
-
-#: Head of the 43-name r6-era cohort (latest green row = round 6), in
-#: CORRECTNESS_r06 sample order; 12 fill round 12's window after the 38
-#: remaining r5 names, the other 31 open round 13's.
-R6_ERA_HEAD: tuple[str, ...] = (
-    "q_cusum_changepoint", "q_fuzzy_match", "q_freshness",
-    "q_skew_profile", "q_cumulative_distinct", "q_sql_macros",
-    "q_zipf_fit", "q_burstiness", "q_gini_sources",
-    "q_ab_lift", "q_first_touch", "q_pagerank_converged",
-)
-
-#: Round-11 window, executed exactly as staged last round (round-10
-#: verdict item 1): all 47 ROUND11_PENDING names (the last 25
-#: never-driver-sampled queries + the 22 r4-era stale rows) plus the
-#: first 3 r5-era names. A green round-11 run drives the
-#: never-driver-sampled set to ZERO for the first time and retires all
-#: r4-era evidence.
-ROUND11_WINDOW_HEAD: tuple[str, ...] = ROUND11_PENDING + R5_ERA_STALE[:3]
-
-#: Round-12 rotation schedule, committed now (round-10 verdict item 5):
-#: the 38 remaining r5-era names + the r6-era cohort head.
-#:
-#: Honest steady-state: with 327 registered queries and a 50-slot
-#: driver window, a full re-verification cycle is ceil(327/50) = 7
-#: rounds. "Every row ≤4 rounds stale" is therefore arithmetically
-#: impossible registry-wide; the bound this schedule actually
-#: guarantees — and test_queries_registry pins — is that no green row
-#: is ever older than 7 rounds, with the stalest cohort always the
-#: next window's head.
-ROUND12_PENDING: tuple[str, ...] = R5_ERA_STALE[3:] + R6_ERA_HEAD
-
-#: Round-12 window = the committed schedule verbatim (it is exactly 50
-#: names: the 38 remaining r5-era rows + the 12-name r6-era cohort head).
-ROUND12_WINDOW_HEAD: tuple[str, ...] = ROUND12_PENDING
-
-#: The 31 r6-era rows past R6_ERA_HEAD (latest green row = round 6), in
-#: CORRECTNESS_r06 sample order. Kept LITERAL — the rotation windows
-#: slice from here, so they must not depend on the evidence files being
-#: present in a packaged deployment.
-R6_ERA_TAIL: tuple[str, ...] = (
-    "q_merge_upsert", "q_ann_recall", "q_multimodal_decode_gif",
-    "q_stratified_sample", "q_cube", "q_conditional_agg",
-    "q_salted_agg", "q_window_distribution", "q_date_arithmetic",
-    "q_gap_fill", "q_forward_fill", "q_argmax",
-    "q_ratio_to_total", "q_histogram", "q_wordcount",
-    "q_scalar_subquery", "q_grouping_sets", "q_hopping_windows",
-    "q_linear_interpolate", "q_time_weighted_avg", "q_funnel",
-    "q_cohort_retention", "q_union_by_name", "q_unpivot",
-    "q_period_over_period", "q_dedup_keep_latest", "q_trailing_window",
-    "q_event_transitions", "q_zscore", "q_minhash_signature",
-    "q_streaming_join",
-)
-
-#: Head of the 47-name r7-era cohort (latest green row = round 7), in
-#: CORRECTNESS_r07 sample order; 19 fill round 13's window after the 31
-#: remaining r6 names, the other 28 open round 14's.
-R7_ERA_HEAD: tuple[str, ...] = (
-    "q_e2e_weather_pipeline", "q_profile_table", "q_zorder_layout",
-    "q_bpe_pair_counts", "q_bpe_merge", "q_hard_negatives",
-    "q_ann_recall_kmeans", "q_streaming_merge_sink", "q_kcore",
-    "q_preagg_reuse", "q_pca_power_project", "q_late_events",
-    "q_bpe_merge_table", "q_mode_by_group", "q_scd2_asof",
-    "q_schema_evolution", "q_fellegi_sunter", "q_chi_square",
-    "q_kmeans",
-)
-
-#: Round-13 rotation schedule, committed now (round-11 verdict item 2):
-#: by round 12's close the stalest cohorts are the 31 remaining r6-era
-#: rows and the r7-era cohort, so round 13 takes them in CORRECTNESS
-#: sample order — exactly 50 slots, keeping every row inside the honest
-#: 7-round freshness bound documented above ROUND12_PENDING.
-ROUND13_PENDING: tuple[str, ...] = R6_ERA_TAIL + R7_ERA_HEAD
-
-
-def _dedup(names: tuple[str, ...]) -> tuple[str, ...]:
-    """First occurrence wins — applied once to the full concatenation so
-    PRIORITY_ORDER itself keeps the one-slot-per-name invariant instead
-    of relying on per-segment not-in filters that must be maintained
-    symmetrically (round-11 advice)."""
-    return tuple(dict.fromkeys(names))
-
-
-PRIORITY_ORDER: tuple[str, ...] = _dedup(
-    # head 50 = round 12's committed window; slots 51-100 = round 13's
-    # committed schedule; then the prior window heads in freshness order
-    # (r11 first — its rows are the newest). Rounds record only the
-    # 50-entry prefix, so placement past 100 is documentation, not
-    # evidence.
-    ROUND12_WINDOW_HEAD
-    + ROUND13_PENDING
-    + ROUND11_WINDOW_HEAD
-    + _recorded_window(10)
-    + ROUND9_WINDOW_HEAD
-    + ROUND8_WINDOW_HEAD
-    + ROUND7_WINDOW_HEAD
-)
-
 
 def _ordered_registry() -> dict[str, QuerySpec]:
     _load_extensions()
-    ordered = {
-        name: REGISTRY[name] for name in PRIORITY_ORDER if name in REGISTRY
+    rank = {name: i for i, name in enumerate(PRIORITY_ORDER)}  # never-green: -1
+    return {
+        name: REGISTRY[name]
+        for name in sorted(REGISTRY, key=lambda n: rank.get(n, -1))
     }
-    ordered.update(
-        (name, spec) for name, spec in REGISTRY.items() if name not in ordered
-    )
-    return ordered
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

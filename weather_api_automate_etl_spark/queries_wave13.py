@@ -1,4 +1,4 @@
-"""Round-8 thirteenth-wave queries (ROUND9_PENDING): file-granular ledger
+"""Round-8 thirteenth-wave queries: file-granular ledger
 skipping plus the round-8 operator additions.
 
 Per-query rationale lives in each function docstring; registry/oracle

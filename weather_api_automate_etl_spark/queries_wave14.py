@@ -1,4 +1,4 @@
-"""Round-8 fourteenth-wave queries (ROUND9_PENDING): multi-writer ledger
+"""Round-8 fourteenth-wave queries: multi-writer ledger
 semantics plus the round-8 operator additions.
 
 Per-query rationale lives in each function docstring; registry/oracle

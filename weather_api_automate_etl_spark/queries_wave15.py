@@ -1,4 +1,4 @@
-"""Round-8 fifteenth-wave queries (ROUND9_PENDING): the streaming CDC
+"""Round-8 fifteenth-wave queries: the streaming CDC
 consumer, residual product quantization, and the nonparametric test.
 
 Per-query rationale lives in each function docstring; registry/oracle

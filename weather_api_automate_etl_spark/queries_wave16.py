@@ -1,4 +1,4 @@
-"""Round-8 sixteenth-wave queries (ROUND9_PENDING): co-located storage
+"""Round-8 sixteenth-wave queries: co-located storage
 joins, k-hop graph search, rank statistics, forecasting, governance
 releases, data selection, and perceptual image dedup.
 

@@ -1,4 +1,4 @@
-"""Round-8 seventeenth-wave queries (ROUND9_PENDING): distributed
+"""Round-8 seventeenth-wave queries: distributed
 uncertainty, information-theoretic dependence, weighted graph search,
 spatial joins, and asymmetric dedup.
 

@@ -1,4 +1,4 @@
-"""Round-8 eighteenth-wave queries (ROUND9_PENDING): leakage-safe
+"""Round-8 eighteenth-wave queries: leakage-safe
 feature engineering, audio feature extraction, partition-spec evolution,
 readability gating, and navigation path mining.
 

@@ -1,4 +1,4 @@
-"""Round-8 nineteenth-wave queries (ROUND9_PENDING): neighborhood
+"""Round-8 nineteenth-wave queries: neighborhood
 recommendations, model-calibration audit, diversity re-ranking, and
 held-out LM scoring with backoff.
 

@@ -1,4 +1,4 @@
-"""Round-8 twentieth-wave queries (ROUND9_PENDING): matrix-factorization
+"""Round-8 twentieth-wave queries: matrix-factorization
 recommendations, censoring-aware survival curves, and the Benford fraud
 screen.
 

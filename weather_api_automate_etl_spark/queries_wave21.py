@@ -1,4 +1,4 @@
-"""Round-8 twenty-first-wave queries (ROUND9_PENDING): logarithmic
+"""Round-8 twenty-first-wave queries: logarithmic
 hierarchy flattening and Pareto-frontier selection.
 
 Per-query rationale lives in each function docstring; registry/oracle

@@ -1,4 +1,4 @@
-"""Round-8 twenty-second-wave queries (ROUND9_PENDING): runtime
+"""Round-8 twenty-second-wave queries: runtime
 partition pruning and format-layer error routing, driver-evidenced.
 
 Per-query rationale lives in each function docstring; registry/oracle

@@ -1,4 +1,4 @@
-"""Round-8 twenty-third-wave queries (ROUND9_PENDING): link prediction
+"""Round-8 twenty-third-wave queries: link prediction
 and asymmetric link analysis.
 
 Per-query rationale lives in each function docstring; registry/oracle

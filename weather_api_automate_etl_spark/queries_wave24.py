@@ -1,4 +1,4 @@
-"""Round-8 twenty-fourth-wave queries (ROUND9_PENDING): paired
+"""Round-8 twenty-fourth-wave queries: paired
 nonparametric testing and weighted quantiles.
 
 Per-query rationale lives in each function docstring; registry/oracle

@@ -1,4 +1,4 @@
-"""Round-8 twenty-fifth-wave queries (ROUND9_PENDING): Kneser-Ney
+"""Round-8 twenty-fifth-wave queries: Kneser-Ney
 smoothing and local clustering coefficients.
 
 Per-query rationale lives in each function docstring; registry/oracle

@@ -1,4 +1,4 @@
-"""Round-8 twenty-sixth-wave queries (ROUND9_PENDING): survival-curve
+"""Round-8 twenty-sixth-wave queries: survival-curve
 comparison and distribution-level privacy release gates.
 
 Per-query rationale lives in each function docstring; registry/oracle

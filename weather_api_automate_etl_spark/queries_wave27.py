@@ -1,4 +1,4 @@
-"""Round-8 twenty-seventh-wave queries (ROUND9_PENDING): closed-form
+"""Round-8 twenty-seventh-wave queries: closed-form
 multi-feature ridge regression and nonparametric trend detection.
 
 Per-query rationale lives in each function docstring; registry/oracle

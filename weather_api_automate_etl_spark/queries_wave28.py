@@ -1,4 +1,4 @@
-"""Round-8 twenty-eighth-wave queries (ROUND9_PENDING): multi-touch
+"""Round-8 twenty-eighth-wave queries: multi-touch
 attribution and robust trend estimation.
 
 Per-query rationale lives in each function docstring; registry/oracle

@@ -1,4 +1,4 @@
-"""Round-8 twenty-ninth-wave queries (ROUND9_PENDING): hybrid-retrieval
+"""Round-8 twenty-ninth-wave queries: hybrid-retrieval
 fusion and ranking evaluation.
 
 Per-query rationale lives in each function docstring; registry/oracle

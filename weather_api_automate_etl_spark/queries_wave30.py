@@ -1,4 +1,4 @@
-"""Round-8 thirtieth-wave queries (ROUND9_PENDING): ORC interchange
+"""Round-8 thirtieth-wave queries: ORC interchange
 roundtrip and mean-reciprocal-rank retrieval evaluation.
 
 Per-query rationale lives in each function docstring; registry/oracle

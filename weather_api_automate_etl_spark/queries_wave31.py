@@ -1,4 +1,4 @@
-"""Round-8 thirty-first-wave queries (ROUND9_PENDING): k-group variance
+"""Round-8 thirty-first-wave queries: k-group variance
 analysis and seasonal forecasting.
 
 Per-query rationale lives in each function docstring; registry/oracle

@@ -1,4 +1,4 @@
-"""Round-8 thirty-second-wave queries (ROUND9_PENDING): graph-based
+"""Round-8 thirty-second-wave queries: graph-based
 keyword extraction and the paired parametric test.
 
 Per-query rationale lives in each function docstring; registry/oracle

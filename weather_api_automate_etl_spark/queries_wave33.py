@@ -1,4 +1,4 @@
-"""Round-8 thirty-third-wave queries (ROUND9_PENDING): tree-split
+"""Round-8 thirty-third-wave queries: tree-split
 search and forecast backtesting.
 
 Per-query rationale lives in each function docstring; registry/oracle

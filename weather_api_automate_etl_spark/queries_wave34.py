@@ -1,4 +1,4 @@
-"""Round-8 thirty-fourth-wave queries (ROUND9_PENDING): robust null
+"""Round-8 thirty-fourth-wave queries: robust null
 imputation and multiple-testing control.
 
 Per-query rationale lives in each function docstring; registry/oracle

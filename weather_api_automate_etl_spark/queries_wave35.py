@@ -1,4 +1,4 @@
-"""Round-8 thirty-fifth-wave queries (ROUND9_PENDING): activity streaks
+"""Round-8 thirty-fifth-wave queries: activity streaks
 and statistical process control.
 
 Per-query rationale lives in each function docstring; registry/oracle

@@ -1,4 +1,4 @@
-"""Round-8 thirty-sixth-wave queries (ROUND9_PENDING): categorical
+"""Round-8 thirty-sixth-wave queries: categorical
 cardinality hygiene and a fleet drift screen with FDR control.
 
 Per-query rationale lives in each function docstring; registry/oracle

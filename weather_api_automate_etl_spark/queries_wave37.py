@@ -1,4 +1,4 @@
-"""Round-8 thirty-seventh-wave queries (ROUND9_PENDING): experiment
+"""Round-8 thirty-seventh-wave queries: experiment
 assignment integrity and forecasting feature engineering.
 
 Per-query rationale lives in each function docstring; registry/oracle

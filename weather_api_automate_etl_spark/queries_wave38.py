@@ -1,4 +1,4 @@
-"""Round-8 thirty-eighth-wave queries (ROUND9_PENDING): the dbt-style
+"""Round-8 thirty-eighth-wave queries: the dbt-style
 test-suite report and robust trimmed means.
 
 Per-query rationale lives in each function docstring; registry/oracle

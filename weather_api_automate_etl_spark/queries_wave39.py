@@ -1,4 +1,4 @@
-"""Round-8 thirty-ninth-wave queries (ROUND9_PENDING): bounded feature
+"""Round-8 thirty-ninth-wave queries: bounded feature
 scaling and deterministic category codes.
 
 Per-query rationale lives in each function docstring; registry/oracle
