@@ -5,9 +5,11 @@ inputs."""
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
 import pytest
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from weather_api_automate_etl_spark.operators import stats, windows
@@ -55,6 +57,12 @@ scored_st = st.lists(
 )
 
 
+# 8 positives x 8 negatives giving AUC = 57/128 = 0.4453125, an exact
+# binary half at the 6th decimal: Spark rounds it half up to 0.445313
+@example(
+    rows=[(s, True) for s in (0, 0, 1, 2, 5, 5, 6, 6)]
+    + [(s, False) for s in (2, 3, 3, 3, 4, 4, 5, 6)]
+)
 @given(rows=scored_st)
 @SETTINGS
 def test_roc_auc_equals_pairwise_probability(spark, rows):
@@ -70,7 +78,10 @@ def test_roc_auc_equals_pairwise_probability(spark, rows):
     want = sum(
         1.0 if p > n else 0.5 if p == n else 0.0 for p in pos for n in neg
     ) / (len(pos) * len(neg))
-    assert abs(got["auc"] - round(want, 6)) <= 1e-6
+    # stats.roc_auc rounds with Spark's round, which is HALF_UP on the
+    # double's decimal form; Python's round() would go half-even
+    want = float(Decimal(repr(want)).quantize(Decimal("1e-6"), ROUND_HALF_UP))
+    assert abs(got["auc"] - want) <= 1e-6
 
 
 kw_st = st.lists(

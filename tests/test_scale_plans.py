@@ -9,7 +9,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from weather_api_automate_etl_spark.operators.marts import write_bucketed
+from weather_api_automate_etl_spark.operators.joins import write_bucketed
 from weather_api_automate_etl_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -182,12 +182,13 @@ def test_no_unpartitioned_window_over_row_scale(spark):
 
 
 @pytest.mark.usefixtures("spark")
-def test_bucketed_join_has_no_shuffle(spark):
+def test_bucketed_join_has_no_shuffle(spark, tmp_path):
     orders = load_table(spark, SF, "orders").limit(500)
     li = load_table(spark, SF, "lineitem").limit(500)
-    write_bucketed(orders, "b_orders", "o_orderkey", 4)
+    write_bucketed(orders, "o_orderkey", 4, "b_orders", str(tmp_path / "b_orders"))
     write_bucketed(
-        li.withColumnRenamed("l_orderkey", "o_orderkey"), "b_lineitem", "o_orderkey", 4
+        li.withColumnRenamed("l_orderkey", "o_orderkey"),
+        "o_orderkey", 4, "b_lineitem", str(tmp_path / "b_lineitem"),
     )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:

@@ -13,10 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from weather_api_automate_etl_spark.queries import REGISTRY, _load_extensions
-from weather_api_automate_etl_spark.queries_ext import (
-    _drain_event_stream,
-    _staged_event_stream,
-)
+from weather_api_automate_etl_spark.queries_ext import _drain_stream
 from weather_api_automate_etl_spark.sources.tables import load_table
 
 from conftest import SF_SMALL
@@ -95,7 +92,7 @@ def test_ns_and_us_events_read_identically(spark, tmp_path):
     batch = [_micros(load_table(spark, sf, "events")) for sf in (ns, us)]
     assert batch[0] == batch[1] == _fixture_micros()
     for sf in (ns, us):
-        drained = _drain_event_stream(
+        drained = _drain_stream(
             spark, sf, "tables_ts_drain", lambda s: s.select("event_id", "ts"),
             output_mode="append",
         )
@@ -108,7 +105,7 @@ def test_stager_leaves_no_dir_when_probe_fails(spark, tmp_path, monkeypatch):
     (tmp_path / "empty").mkdir()
     monkeypatch.setattr(tempfile, "tempdir", str(scratch))
     with pytest.raises(Exception):
-        _staged_event_stream(spark, str(tmp_path / "empty"), "leak")
+        _drain_stream(spark, str(tmp_path / "empty"), "leak", lambda s: s)
     assert os.listdir(scratch) == []
 
 

@@ -8,7 +8,7 @@ classifies rows between two table versions; composed with
 
 Scale shape: one full-outer equi-join on the key (single shuffle each
 side, or zero when both snapshots are bucket-written on the key via
-marts.write_bucketed); change detection compares md5 over the tracked
+joins.write_bucketed); change detection compares md5 over the tracked
 columns, computed map-side before the join.
 """
 

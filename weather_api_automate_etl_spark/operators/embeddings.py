@@ -25,6 +25,12 @@ import math
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from weather_api_automate_etl_spark.functions.vectors import (
+    sql_dlit,
+    sql_ident,
+    sql_vec_lit,
+)
+
 
 def quantize_int8(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Symmetric per-vector int8 quantization: scale = absmax/127,
@@ -510,29 +516,8 @@ def _sq_dist(a: F.Column, b: F.Column) -> F.Column:
 # pq_adc_expr node for node; tests pin RESULT equality against the old
 # Column composition on awkward doubles (analyzed-plan strings differ
 # in lambda-variable/expr-id naming, so byte equality is not the pin).
-
-
-def _qid(name: str) -> str:
-    """Backtick-quoted SQL identifier, embedded backticks doubled.
-    NOTE backtick quoting binds a literal TOP-LEVEL column: a dotted
-    name like 'a.b' means a column named "a.b", not field b of struct a
-    (which the old F.col composition would have resolved). The PQ
-    callers pass simple top-level names; the escaping just keeps a
-    hostile name from injecting SQL text (round-12 advice)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _dlit(x: float) -> str:
-    """Exact SQL double literal: repr() round-trips IEEE doubles and the
-    SQL parser's Double.parseDouble reads them back bit-identically."""
-    r = repr(float(x))
-    if "inf" in r or "nan" in r:
-        raise ValueError(f"non-finite codebook value: {x!r}")
-    return f"{r}D"
-
-
-def _darr(xs) -> str:
-    return "array(" + ", ".join(_dlit(x) for x in xs) + ")"
+# Identifiers and literals render through functions/vectors.py (sql_ident,
+# sql_dlit, sql_vec_lit), the one owner of SQL-text rendering.
 
 
 def _sq_dist_sql(a: str, b: str) -> str:
@@ -566,16 +551,16 @@ def pq_encode(
     m_sub = len(codebooks)
     sub = len(codebooks[0][0])
     # one SQL string instead of per-node py4j Column composition — same
-    # expression tree, ~100x cheaper to build (see _dlit block above)
-    e = f"transform({_qid(vec_col)}, x -> CAST(x AS DOUBLE))"
+    # expression tree, ~100x cheaper to build (see the SQL-text block above)
+    e = f"transform({sql_ident(vec_col)}, x -> CAST(x AS DOUBLE))"
     code_cols = []
     for m in range(m_sub):
         s = f"slice({e}, {m * sub + 1}, {sub})"
-        cand = [_sq_dist_sql(s, _darr(c)) for c in codebooks[m]]
+        cand = [_sq_dist_sql(s, sql_vec_lit(c)) for c in codebooks[m]]
         if clamp_digits is not None:
             scale = float(10 ** clamp_digits)
             cand = [
-                f"CAST(floor({d} * {_dlit(scale)} + 0.5D) AS BIGINT)"
+                f"CAST(floor({d} * {sql_dlit(scale)} + 0.5D) AS BIGINT)"
                 for d in cand
             ]
         dists = "array(" + ", ".join(cand) + ")"
@@ -629,27 +614,27 @@ def pq_adc_expr(
         )
     m_sub = len(codebooks)
     sub = len(codebooks[0][0])
-    # SQL-text construction (see _dlit block): same tree as the old
+    # SQL-text construction (see the SQL-text block): same tree as the old
     # Column composition, one parse instead of ~m_sub·k·sub py4j calls
     adc = "0.0D"
     for m in range(m_sub):
-        q_m = _darr(query_vec[m * sub : (m + 1) * sub])
+        q_m = sql_vec_lit(query_vec[m * sub : (m + 1) * sub])
         # distance table row for subspace m, constant-folded JVM-side
         table_m = (
             "array("
-            + ", ".join(_sq_dist_sql(q_m, _darr(c)) for c in codebooks[m])
+            + ", ".join(_sq_dist_sql(q_m, sql_vec_lit(c)) for c in codebooks[m])
             + ")"
         )
         adc = (
             f"({adc} + element_at({table_m}, "
-            f"element_at({_qid(codes_col)}, {m + 1})))"
+            f"element_at({sql_ident(codes_col)}, {m + 1})))"
         )
     if clamp_digits is not None:
         # integer nanos: the ranking key carries no double-compare ulp
         scale = float(10 ** clamp_digits)
         adc = (
-            f"(CAST(floor({adc} * {_dlit(scale)} + 0.5D) AS BIGINT)"
-            f" / {_dlit(scale)})"
+            f"(CAST(floor({adc} * {sql_dlit(scale)} + 0.5D) AS BIGINT)"
+            f" / {sql_dlit(scale)})"
         )
     return F.expr(adc)
 

@@ -83,23 +83,6 @@ def write_mart(df: DataFrame, path: str, partition_by: str | None = "extraction_
     writer.parquet(path)
 
 
-def write_bucketed(
-    df: DataFrame, table: str, bucket_by: str, n_buckets: int = 32
-) -> None:
-    """Bucketed mart for co-located joins: both sides bucketed on the join
-    key by the same bucket count join with ZERO shuffle (SortMergeJoin
-    reads bucket i against bucket i directly). This is the storage-layout
-    answer to repeated large joins — pay the shuffle once at write time,
-    never at read time."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_by)
-        .sortBy(bucket_by)
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
 def cohort_ltv(
     df: DataFrame,
     customer_col: str,

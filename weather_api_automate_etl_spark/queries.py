@@ -19,13 +19,19 @@ Conventions that keep the hash comparison exact:
   ``aggregate``; DuckDB ``list_sum`` over an index-ordered transform), so
   scores are bit-identical before the defensive round(6);
 - DuckDB ``len()``/``row_number()`` return BIGINT where Spark returns int —
-  oracles cast explicitly.
+  oracles cast explicitly;
+- a query that writes (ledgers, marts, stream stages, checkpoints) does so
+  under ``with scratch(name) as base:``, which removes the directory on
+  return and on raise, so the returned frame must not read from it.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Callable
+import shutil
+import tempfile
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from pathlib import Path
 
@@ -63,6 +69,23 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
+
+
+@contextmanager
+def scratch(name: str) -> Iterator[str]:
+    """The one owner of a query run's scratch state (ledgers, marts,
+    stream stages, checkpoints, sinks): yields a fresh, empty parent
+    directory ``{name}_*`` made under ``tempfile.gettempdir()`` at call
+    time, and removes it with everything under it on exit — on return
+    and on raise. A query that needs one directory uses the parent; one
+    that needs several, or a path that must not exist yet (a sink that
+    bootstraps a missing table), uses children such as
+    ``f"{base}/table"``, which this never creates."""
+    base = tempfile.mkdtemp(prefix=f"{name}_")
+    try:
+        yield base
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

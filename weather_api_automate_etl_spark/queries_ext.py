@@ -7,10 +7,6 @@ conventions in queries.py.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from weather_api_automate_etl_spark.functions import core
@@ -22,8 +18,9 @@ from weather_api_automate_etl_spark.operators import (
     textops,
     windows,
 )
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 from weather_api_automate_etl_spark.sources import multimodal
+from weather_api_automate_etl_spark.streaming import events as stream_events
 
 _TOKENS_SQL = "regexp_split_to_array(lower(trim(text)), '\\s+')"
 
@@ -38,13 +35,33 @@ _EVENT_STREAM_SCHEMA_FMT = (
 )
 
 
+def _staged_table_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    schema: str,
+    stage_dir: str,
+    copies: int = 1,
+) -> DataFrame:
+    """File stream over the fixture ``table`` under its declared
+    ``schema``, staged into ``stage_dir`` by streaming/events.py::stage
+    (file streams need a directory; ``copies`` > 1 symlinks the same
+    file N times, a zero-copy way to stream genuine duplicate rows).
+    Self-heals the engine confs like every read path: the driver builds
+    its own, possibly hostile, session."""
+    from weather_api_automate_etl_spark.sources.tables import _ensure_engine_confs
+
+    _ensure_engine_confs(spark)
+    for i in range(copies):
+        stream_events.stage(stage_dir, f"{table}_{i}", f"{sf_dir}/{table}.parquet")
+    return spark.readStream.schema(schema).parquet(stage_dir)
+
+
 def _staged_event_stream(
-    spark: SparkSession, sf_dir: str, prefix: str, copies: int = 1
-) -> tuple[str, DataFrame]:
-    """Stage the events fixture behind a symlink dir (file stream sources
-    need a directory; no data copy — ``copies`` > 1 symlinks the same file
-    N times, a zero-copy way to stream genuine duplicate rows) and return
-    (stage_dir, stream) with ``ts`` normalized to a µs timestamp.
+    spark: SparkSession, sf_dir: str, stage_dir: str, copies: int = 1
+) -> DataFrame:
+    """``_staged_table_stream`` over the events fixture, with ``ts``
+    normalized to a µs timestamp.
 
     File streams need a user-declared schema, and declaring the wrong ts
     precision silently corrupts every event time (a µs long divided as ns
@@ -53,117 +70,60 @@ def _staged_event_stream(
     first read of the file only), and stage accordingly: ns generations
     arrive as bigint and take the integer-div path (ns epochs exceed
     double's mantissa, so never float-divide); µs generations arrive as a
-    native timestamp type. The schema is resolved before the stage dir
-    exists, so a missing or unreadable file leaves nothing behind."""
-    # batch queries self-heal via load_table; the streaming stager builds
-    # its own source, so heal here too (read_fixture sets the engine confs)
-    # — otherwise a non-UTC caller session shifts every instant→ntz
-    # window/session boundary by the tz offset
+    native timestamp type."""
     from weather_api_automate_etl_spark.sources.tables import read_fixture
 
     batch_ts = dict(read_fixture(spark, f"{sf_dir}/events.parquet").dtypes)["ts"]
-    stage_dir = tempfile.mkdtemp(prefix=f"{prefix}_")
-    for i in range(copies):
-        os.symlink(f"{sf_dir}/events.parquet", f"{stage_dir}/events_{i}.parquet")
     if batch_ts == "bigint":
-        stream = (
-            spark.readStream.schema(_EVENT_STREAM_SCHEMA_FMT.format(ts_type="long"))
-            .parquet(stage_dir)
-            .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        )
+        schema = _EVENT_STREAM_SCHEMA_FMT.format(ts_type="long")
+        ts = F.timestamp_micros(F.expr("ts div 1000"))
     else:
-        stream = (
-            spark.readStream.schema(
-                _EVENT_STREAM_SCHEMA_FMT.format(ts_type=batch_ts)
-            )
-            .parquet(stage_dir)
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-        )
-    return stage_dir, stream
+        schema = _EVENT_STREAM_SCHEMA_FMT.format(ts_type=batch_ts)
+        ts = F.col("ts").cast("timestamp")
+    stream = _staged_table_stream(spark, sf_dir, "events", schema, stage_dir, copies)
+    return stream.withColumn("ts", ts)
 
 
-def _staged_table_stream(
-    spark: SparkSession, sf_dir: str, table: str, schema: str, prefix: str
-):
-    """Generic symlink-staged file stream over a fixture table with a
-    static schema — the base recipe ``_staged_event_stream`` layers its
-    ts-precision probing on top of; non-timestamp tables (documents) use
-    it directly. Self-heals the engine confs like every stager (the
-    driver builds its own, possibly hostile, session)."""
-    from weather_api_automate_etl_spark.sources.tables import _ensure_engine_confs
-
-    _ensure_engine_confs(spark)
-    stage_dir = tempfile.mkdtemp(prefix=f"{prefix}_")
-    os.symlink(f"{sf_dir}/{table}.parquet", f"{stage_dir}/{table}_0.parquet")
-    return stage_dir, spark.readStream.schema(schema).parquet(stage_dir)
-
-
-def _drain_table_stream(
+def _drain_stream(
     spark: SparkSession,
     sf_dir: str,
-    table: str,
-    schema: str,
     sink: str,
     build,
+    table: str = "events",
+    schema: str | None = None,
     **drain_kwargs,
 ) -> DataFrame:
-    """Table-generic twin of ``_drain_event_stream``: stage, transform,
-    drain availableNow into a memory sink, clean up — one definition of
-    the stop-sink/stage/drain/rmtree recipe for non-events tables."""
-    for active in spark.streams.active:
-        if active.name == sink:
-            active.stop()
-    from weather_api_automate_etl_spark.streaming import events as stream_events
-
-    stage_dir, stream = _staged_table_stream(spark, sf_dir, table, schema, sink)
-    try:
+    """Shared recipe for every memory-sink streaming query: stage the
+    events fixture (``_staged_event_stream``) — or another fixture
+    ``table`` under its static ``schema`` — apply ``build(stream)``,
+    drain into the memory sink ``sink``, return the sink table. The
+    stage lives in a ``scratch`` dir removed before returning; the
+    memory sink does not read from it."""
+    with scratch(sink) as base:
+        stage_dir = f"{base}/stage"
+        if schema is None:
+            stream = _staged_event_stream(spark, sf_dir, stage_dir)
+        else:
+            stream = _staged_table_stream(spark, sf_dir, table, schema, stage_dir)
         stream_events.run_to_memory_sink(build(stream), sink, **drain_kwargs)
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-    return spark.table(sink)
-
-
-def _drain_event_stream(
-    spark: SparkSession, sf_dir: str, sink: str, build, **drain_kwargs
-) -> DataFrame:
-    """Shared recipe for every memory-sink q_streaming_* query: stage via
-    ``_staged_event_stream``, apply ``build(stream)``, drain availableNow
-    into a fresh memory sink, clean up, return the sink table. One
-    definition so the staging/conversion traps live in exactly one place."""
-    for active in spark.streams.active:
-        if active.name == sink:
-            active.stop()
-    from weather_api_automate_etl_spark.streaming import events as stream_events
-
-    stage_dir, stream = _staged_event_stream(spark, sf_dir, sink)
-    try:
-        stream_events.run_to_memory_sink(build(stream), sink, **drain_kwargs)
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
     return spark.table(sink)
 
 
 def _drain_event_stream_to_files(
     spark: SparkSession, sf_dir: str, name: str, build, copies: int = 1
 ) -> DataFrame:
-    """File-sink twin of ``_drain_event_stream``: drain into a parquet
-    append sink with a checkpoint (streaming/events.py::run_to_file_sink —
-    the exactly-once landing-zone path), batch-read the sink back,
-    materialize it (localCheckpoint), and remove the temp dirs. The
-    returned frame is what a downstream batch consumer of the landing zone
-    would see — which is exactly what the driver hashes."""
-    from weather_api_automate_etl_spark.streaming import events as stream_events
-
-    stage_dir, stream = _staged_event_stream(spark, sf_dir, name, copies=copies)
-    sink_dir = tempfile.mkdtemp(prefix=f"{name}_sink_")
-    try:
+    """File-sink twin of ``_drain_stream``: drain into a parquet append
+    sink with a checkpoint (streaming/events.py::run_to_file_sink — the
+    exactly-once landing-zone path), batch-read the sink back and
+    materialize it (localCheckpoint) before the scratch dir goes. The
+    returned frame is what a downstream batch consumer of the landing
+    zone would see — which is exactly what the driver hashes."""
+    with scratch(name) as base:
+        stream = _staged_event_stream(spark, sf_dir, f"{base}/stage", copies)
         stream_events.run_to_file_sink(
-            build(stream), f"{sink_dir}/data", f"{sink_dir}/ckpt"
+            build(stream), f"{base}/sink/data", f"{base}/sink/ckpt"
         )
-        return spark.read.parquet(f"{sink_dir}/data").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(sink_dir, ignore_errors=True)
+        return spark.read.parquet(f"{base}/sink/data").localCheckpoint(eager=True)
 
 
 # ---------------------------------------------------------------------------
@@ -873,9 +833,7 @@ def q_streaming_event_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     readStream over the events fixture → watermarked tumbling windows →
     availableNow drain into a memory sink. Must hash-match the same batch
     oracle — streaming and batch semantics agree on bounded input."""
-    from weather_api_automate_etl_spark.streaming import events as stream_events
-
-    return _drain_event_stream(
+    return _drain_stream(
         spark, sf_dir, "q_streaming_event_windows_sink",
         stream_events.windowed_counts, timeout_s=120,
     )
@@ -912,9 +870,7 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes the identical sessions via gaps-and-islands — an
     independent algorithm for the same semantics. Watermark is bounded-
     fixture-huge so no state is evicted mid-drain."""
-    from weather_api_automate_etl_spark.streaming import events as stream_events
-
-    return _drain_event_stream(
+    return _drain_stream(
         spark, sf_dir, "q_streaming_sessions_sink",
         lambda st: stream_events.session_counts(st, watermark="365 days"),
         timeout_s=120,
@@ -934,10 +890,8 @@ def q_streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_events grows monotonically, so max_by(total_value, n_events) +
     max(n_events) recovers the last update per user — which must equal
     the plain batch aggregate the oracle computes."""
-    from weather_api_automate_etl_spark.streaming import events as stream_events
-
     return (
-        _drain_event_stream(
+        _drain_stream(
             spark, sf_dir, "q_streaming_stateful_sink",
             stream_events.running_user_totals,
             output_mode="update", timeout_s=120,
@@ -1359,11 +1313,9 @@ def q_streaming_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     lookback, both sides watermarked, drained availableNow into a memory
     sink. Hash-matches the batch inequality join the DuckDB oracle runs —
     on bounded input, stream-stream and batch join semantics agree."""
-    from weather_api_automate_etl_spark.streaming import events as stream_events
-
     # one staged file -> one micro-batch, but keep the watermark wide
     # anyway: state eviction must never race the bounded drain
-    return _drain_event_stream(
+    return _drain_stream(
         spark, sf_dir, "q_streaming_join_sink",
         lambda st: stream_events.clicks_with_recent_purchase(
             st, lookback_hours=1, watermark="365 days"

@@ -10,9 +10,6 @@ conventions in queries.py.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from weather_api_automate_etl_spark.operators import (
@@ -22,7 +19,7 @@ from weather_api_automate_etl_spark.operators import (
     similarity,
     textops,
 )
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 from weather_api_automate_etl_spark.queries_ext import (
     _ann_ivf_oracle,
     _neardup_lsh_oracle,
@@ -344,14 +341,11 @@ def q_ann_ivf_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
     corp = emb.filter(F.col("vec_id") != 0)
-    path = tempfile.mkdtemp(prefix="ivf_index_")
-    try:
+    with scratch("ivf_index") as path:
         similarity.build_ivf_index(corp, path, "embedding", "label")
         result = similarity.ivf_topk_from_index(
             spark, path, qvec, list_col="label", k=10, nprobe=3
         ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
     return result
 
 
@@ -718,7 +712,7 @@ def q_streaming_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weather_api_automate_etl_spark.functions.text import (
         document_fingerprint,
     )
-    from weather_api_automate_etl_spark.queries_ext import _drain_table_stream
+    from weather_api_automate_etl_spark.queries_ext import _drain_stream
 
     def build(stream: DataFrame) -> DataFrame:
         return (
@@ -731,13 +725,13 @@ def q_streaming_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    return _drain_table_stream(
+    return _drain_stream(
         spark,
         sf_dir,
-        "documents",
-        _DOCS_STREAM_SCHEMA,
         "q_streaming_corpus_clean",
         build,
+        table="documents",
+        schema=_DOCS_STREAM_SCHEMA,
         output_mode="append",
     )
 

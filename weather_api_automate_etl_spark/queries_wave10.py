@@ -9,17 +9,14 @@ conventions in queries.py.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 from weather_api_automate_etl_spark.queries_ext import (
     _MINHASH_SIG_SQL,
     _staged_event_stream,
 )
+from weather_api_automate_etl_spark.streaming import events as stream_events
 
 # ---------------------------------------------------------------------------
 # streaming MERGE sink — the continuously-maintained mart
@@ -56,34 +53,22 @@ def q_streaming_merge_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weather_api_automate_etl_spark.streaming import sinks
 
     name = "q_streaming_merge_sink"
-    stage_dir, stream = _staged_event_stream(spark, sf_dir, name)
-    mart = tempfile.mkdtemp(prefix=f"{name}_mart_")
-    shutil.rmtree(mart)  # stream_merge_into_mart bootstraps a missing mart
-    ckpt = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
-    projected = stream.select(
-        "user_id", "event_id", "ts", "value",
-        (F.col("user_id") % 16).cast("long").alias("p"),
-    )
-    try:
-        sinks.stream_merge_into_mart(
-            projected, mart, ckpt, name,
-            key="user_id", partition_col="p", order_cols=("ts", "event_id"),
+    kwargs = dict(key="user_id", partition_col="p", order_cols=("ts", "event_id"))
+    with scratch(name) as base:
+        stage, mart, ckpt = f"{base}/stage", f"{base}/mart", f"{base}/ckpt"
+        projected = _staged_event_stream(spark, sf_dir, stage).select(
+            "user_id", "event_id", "ts", "value",
+            (F.col("user_id") % 16).cast("long").alias("p"),
         )
+        sinks.stream_merge_into_mart(projected, mart, ckpt, name, **kwargs)
         # phase 2: the same fixture arrives as a NEW file — the checkpoint
         # resumes past batch 0, so this is a genuine incremental merge run
-        os.symlink(f"{sf_dir}/events.parquet", f"{stage_dir}/events_1.parquet")
-        sinks.stream_merge_into_mart(
-            projected, mart, ckpt, name,
-            key="user_id", partition_col="p", order_cols=("ts", "event_id"),
-        )
+        stream_events.stage(stage, "events_1", f"{sf_dir}/events.parquet")
+        sinks.stream_merge_into_mart(projected, mart, ckpt, name, **kwargs)
         out = spark.read.parquet(mart).select(
             "user_id", "event_id", "ts", "value", F.col("p").cast("long").alias("p")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(mart, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -13,7 +13,7 @@ import math as _math
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 from weather_api_automate_etl_spark.queries_wave9 import _BPE_PAIRS_SQL
 
 # ---------------------------------------------------------------------------
@@ -237,12 +237,8 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     on. The footer-merge cost is why production tables pin the schema in
     the catalog instead (sources/catalog.py) — this query pins that the
     read path itself is correct when they don't."""
-    import shutil
-    import tempfile
-
     orders = t(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="schema_evo_")
-    try:
+    with scratch("schema_evo") as base:
         orders.filter(F.col("o_orderkey") % 2 == 0).select(
             "o_orderkey", "o_totalprice"
         ).write.mode("overwrite").parquet(f"{base}/gen=1")
@@ -255,8 +251,6 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("o_orderkey", "o_totalprice", "o_orderstatus")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
 
 # ---------------------------------------------------------------------------
 # probabilistic record linkage (Fellegi–Sunter)

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 from weather_api_automate_etl_spark.queries_wave9 import _PROFILE_COLS
 
 # ---------------------------------------------------------------------------
@@ -227,9 +227,6 @@ def q_ledger_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2, never a mix — crash-wedge and time-travel proofs live in
     tests/test_ledger.py. The +100.0/*0.5 arithmetic is IEEE-exact; only
     the per-partition SUM needs round(2)."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.sources import ledger
 
     orders = t(spark, sf_dir, "orders")
@@ -253,8 +250,7 @@ def q_ledger_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    path = tempfile.mkdtemp(prefix="ledger_mart_")
-    try:
+    with scratch("ledger_mart") as path:
         ledger.ledger_write(spark, base, path, "o_year")
         ledger.ledger_merge(spark, path, updates, "o_orderkey")
         out = (
@@ -266,8 +262,6 @@ def q_ledger_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -297,9 +291,6 @@ def q_ledger_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ledger.py. This is the mechanism that lets a 2-day query
     touch 2 of ~3000 daily partitions at 100 TB when the predicate column
     correlates with, but is not, the partition key."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.sources import ledger
 
     orders = t(spark, sf_dir, "orders")
@@ -309,8 +300,7 @@ def q_ledger_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
         F.date_format("o_orderdate", "yyyy").alias("o_year"),
     )
-    path = tempfile.mkdtemp(prefix="ledger_skip_")
-    try:
+    with scratch("ledger_skip") as path:
         ledger.ledger_write(
             spark, base, path, "o_year", stats_cols=["o_orderdate"]
         )
@@ -327,8 +317,6 @@ def q_ledger_skip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -359,42 +347,27 @@ def q_streaming_ledger_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-latest-per-user over the whole stream, exactly the
     q_streaming_merge_sink contract upgraded from Hive-layout dynamic
     overwrite to atomic manifest swap."""
-    import os
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.queries_ext import _staged_event_stream
     from weather_api_automate_etl_spark.sources import ledger
+    from weather_api_automate_etl_spark.streaming import events as stream_events
     from weather_api_automate_etl_spark.streaming import sinks
 
     name = "q_streaming_ledger_sink"
-    stage_dir, stream = _staged_event_stream(spark, sf_dir, name)
-    table = tempfile.mkdtemp(prefix=f"{name}_table_")
-    shutil.rmtree(table)  # the sink bootstraps a missing table
-    ckpt = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
-    projected = stream.select(
-        "user_id", "event_id", "ts", "value",
-        (F.col("user_id") % 16).cast("long").alias("p"),
-    )
-    try:
-        sinks.stream_merge_into_ledger(
-            projected, table, ckpt, name,
-            key="user_id", partition_col="p", order_cols=("ts", "event_id"),
+    kwargs = dict(key="user_id", partition_col="p", order_cols=("ts", "event_id"))
+    with scratch(name) as base:
+        stage, table, ckpt = f"{base}/stage", f"{base}/table", f"{base}/ckpt"
+        projected = _staged_event_stream(spark, sf_dir, stage).select(
+            "user_id", "event_id", "ts", "value",
+            (F.col("user_id") % 16).cast("long").alias("p"),
         )
-        os.symlink(f"{sf_dir}/events.parquet", f"{stage_dir}/events_1.parquet")
-        sinks.stream_merge_into_ledger(
-            projected, table, ckpt, name,
-            key="user_id", partition_col="p", order_cols=("ts", "event_id"),
-        )
+        sinks.stream_merge_into_ledger(projected, table, ckpt, name, **kwargs)
+        stream_events.stage(stage, "events_1", f"{sf_dir}/events.parquet")
+        sinks.stream_merge_into_ledger(projected, table, ckpt, name, **kwargs)
         out = ledger.ledger_read(spark, table).select(
             "user_id", "event_id", "ts", "value",
             F.col("p").cast("long").alias("p"),
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(table, ignore_errors=True)
 
 
 @query(
@@ -423,9 +396,6 @@ def q_ledger_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     undersized-index correctness, partition-hint and unindexed scan
     paths, full-partition removal, replay idempotence, and txn dedup are
     pinned in tests/test_ledger.py."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.sources import ledger
 
     orders = t(spark, sf_dir, "orders")
@@ -436,8 +406,7 @@ def q_ledger_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy").alias("o_year"),
     )
     doomed = base.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
-    path = tempfile.mkdtemp(prefix="ledger_delete_")
-    try:
+    with scratch("ledger_delete") as path:
         ledger.ledger_write(
             spark, base, path, "o_year", key_index_col="o_orderkey"
         )
@@ -451,8 +420,6 @@ def q_ledger_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @query(
@@ -479,9 +446,6 @@ def q_ledger_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds, multi-version composition, and empty self-diffs are pinned in
     tests/test_ledger.py. The +100.0/*0.5 arithmetic is IEEE-exact, so
     the doubles hash without rounding."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.sources import ledger
 
     orders = t(spark, sf_dir, "orders")
@@ -505,16 +469,13 @@ def q_ledger_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    path = tempfile.mkdtemp(prefix="ledger_cdf_")
-    try:
+    with scratch("ledger_cdf") as path:
         ledger.ledger_write(spark, base, path, "o_year")
         ledger.ledger_merge(spark, path, updates, "o_orderkey")
         out = ledger.ledger_changes(
             spark, path, "o_orderkey", ["o_totalprice"], v_from=1, v_to=2
         ).select("o_orderkey", "change_type", "o_totalprice")
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 _PSI_EDGES = (50_000.0, 100_000.0, 150_000.0, 200_000.0, 300_000.0)

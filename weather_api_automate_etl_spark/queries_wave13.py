@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 
 # ---------------------------------------------------------------------------
 # file-granular zone-map skipping
@@ -44,9 +44,6 @@ def q_ledger_skip_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter, so over-pruning (dropping a matching file) breaks the hash.
     At 100 TB this is the difference between touching 1 file and 200
     inside a hot daily partition that merges have fragmented."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.sources import ledger
 
     orders = t(spark, sf_dir, "orders")
@@ -56,8 +53,7 @@ def q_ledger_skip_files(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderdate",
         F.date_format("o_orderdate", "yyyy").alias("o_year"),
     )
-    path = tempfile.mkdtemp(prefix="ledger_skip_files_")
-    try:
+    with scratch("ledger_skip_files") as path:
         # range-partition by (year, date): each year dir gets several
         # parquet files whose o_orderdate stats bands are disjoint —
         # the fragmented-partition shape file skipping exists for
@@ -91,8 +87,6 @@ def q_ledger_skip_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -148,9 +142,6 @@ def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The +100.0/*0.5 arithmetic is IEEE-exact; the per-group SUM runs in
     decimal(18,3) (order-independent) because one group's true total
     sits exactly on a cent-rounding boundary at sf0.1; MAX is exact."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.operators import matview
     from weather_api_automate_etl_spark.sources import ledger
 
@@ -187,9 +178,8 @@ def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sum_price"),
         F.max("o_totalprice").alias("max_price"),
     ]
-    bp = tempfile.mkdtemp(prefix="mv_base_")
-    mp = tempfile.mkdtemp(prefix="mv_view_")
-    try:
+    with scratch("q_mv_incremental") as work:
+        bp, mp = f"{work}/base", f"{work}/view"
         ledger.ledger_write(spark, base, bp, "o_year")
         v1 = matview.mv_build(spark, bp, mp, group_cols, aggs)
         ledger.ledger_merge(spark, bp, updates, "o_orderkey")
@@ -210,9 +200,6 @@ def q_mv_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_year", "o_orderpriority", "n_orders", "sum_price", "max_price"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(bp, ignore_errors=True)
-        shutil.rmtree(mp, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -245,9 +232,6 @@ def q_ledger_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over the compacted table is what this query returns, so
     the oracle (the declarative complement) checks the entire
     tombstone → read-time-apply → materialize chain end to end."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.sources import ledger
 
     orders = t(spark, sf_dir, "orders")
@@ -258,8 +242,7 @@ def q_ledger_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy").alias("o_year"),
     )
     doomed = base.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
-    path = tempfile.mkdtemp(prefix="ledger_delete_dv_")
-    try:
+    with scratch("ledger_delete_dv") as path:
         ledger.ledger_write(spark, base, path, "o_year")
         v2 = ledger.ledger_delete(
             spark, path, doomed, "o_orderkey", mode="dv"
@@ -287,8 +270,6 @@ def q_ledger_delete_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -330,25 +311,12 @@ def q_streaming_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the oracle. The reference's closest shape is a full dbt
     rebuild per schedule; this is the 100 TB replacement: the mart AND
     its rollup stay in sync touching only what each batch changed."""
-    import os
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.queries_ext import _staged_event_stream
     from weather_api_automate_etl_spark.sources import ledger
+    from weather_api_automate_etl_spark.streaming import events as stream_events
     from weather_api_automate_etl_spark.streaming import sinks
 
     name = "q_streaming_mv"
-    stage_dir, stream = _staged_event_stream(spark, sf_dir, name)
-    table = tempfile.mkdtemp(prefix=f"{name}_table_")
-    shutil.rmtree(table)  # the sink bootstraps a missing table
-    mv = tempfile.mkdtemp(prefix=f"{name}_mv_")
-    shutil.rmtree(mv)
-    ckpt = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
-    projected = stream.select(
-        "user_id", "event_id", "ts", "value",
-        (F.col("user_id") % 16).cast("long").alias("p"),
-    )
     aggs_fn = lambda: [  # noqa: E731 — the view definition, restated per sync
         F.count(F.lit(1)).cast("long").alias("n_users"),
         F.round(F.sum("value"), 6).alias("sum_value"),
@@ -358,20 +326,22 @@ def q_streaming_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         key="user_id", partition_col="p", order_cols=("ts", "event_id"),
         group_cols=("p",), aggs_fn=aggs_fn,
     )
-    try:
+    with scratch(name) as base:
+        stage, table, mv, ckpt = (
+            f"{base}/stage", f"{base}/table", f"{base}/mv", f"{base}/ckpt"
+        )
+        projected = _staged_event_stream(spark, sf_dir, stage).select(
+            "user_id", "event_id", "ts", "value",
+            (F.col("user_id") % 16).cast("long").alias("p"),
+        )
         sinks.stream_merge_with_mv(projected, table, mv, ckpt, name, **kwargs)
-        os.symlink(f"{sf_dir}/events.parquet", f"{stage_dir}/events_1.parquet")
+        stream_events.stage(stage, "events_1", f"{sf_dir}/events.parquet")
         sinks.stream_merge_with_mv(projected, table, mv, ckpt, name, **kwargs)
         out = ledger.ledger_read(spark, mv).select(
             F.col("p").cast("long").alias("p"),
             "n_users", "sum_value", "max_value",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(table, ignore_errors=True)
-        shutil.rmtree(mv, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -409,9 +379,6 @@ def q_ledger_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     declarative filter, so over-pruning breaks the hash. This is
     Delta/Iceberg OPTIMIZE ZORDER at the ledger's grain: layout changes,
     answers don't, the skipping index gets a second dimension."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.sources import ledger
 
     orders = t(spark, sf_dir, "orders")
@@ -421,8 +388,7 @@ def q_ledger_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.date_format("o_orderdate", "yyyy").alias("o_year"),
     )
-    path = tempfile.mkdtemp(prefix="ledger_zorder_")
-    try:
+    with scratch("ledger_zorder") as path:
         # random layout: repartition(6) scatters rows, so every file's
         # min/max band covers ~the full domain of both columns
         ledger.ledger_write(
@@ -473,8 +439,6 @@ def q_ledger_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -623,9 +587,6 @@ def q_ledger_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     didn't reach; per-year counts of the evolved column pin the NULL
     materialization exactly. Sums run in decimal(18,3) (the
     cent-boundary discipline)."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.sources import ledger
 
     orders = t(spark, sf_dir, "orders")
@@ -649,8 +610,7 @@ def q_ledger_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    path = tempfile.mkdtemp(prefix="ledger_evolve_")
-    try:
+    with scratch("ledger_evolve") as path:
         ledger.ledger_write(spark, base, path, "o_year")
         m1 = ledger._read_manifest(path, 1)
         v2 = ledger.ledger_merge(
@@ -678,8 +638,6 @@ def q_ledger_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 
 # ---------------------------------------------------------------------------
 # time travel: one table, two pinned versions, one answer
@@ -58,9 +58,6 @@ def q_ledger_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes both states declaratively — a time-travel reader
     that leaked post-merge rows into v1 (or vice versa) breaks the
     hash."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.sources import ledger
 
     orders = t(spark, sf_dir, "orders")
@@ -84,8 +81,7 @@ def q_ledger_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    path = tempfile.mkdtemp(prefix="ledger_tt_")
-    try:
+    with scratch("ledger_tt") as path:
         ledger.ledger_write(spark, base, path, "o_year")
         ledger.ledger_merge(spark, path, updates, "o_orderkey")
 
@@ -104,8 +100,6 @@ def q_ledger_timetravel(spark: SparkSession, sf_dir: str) -> DataFrame:
             agg(ledger.ledger_read(spark, path, version=2), 2)
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -134,9 +128,6 @@ def q_ledger_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollback reversed both the upsert and the delete exactly. The
     watermark-retention and vacuumed-history error contracts are pinned
     in tests/test_ledger.py."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.sources import ledger
 
     orders = t(spark, sf_dir, "orders")
@@ -151,8 +142,7 @@ def q_ledger_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_year",
     )
     doomed = base.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
-    path = tempfile.mkdtemp(prefix="ledger_restore_")
-    try:
+    with scratch("ledger_restore") as path:
         ledger.ledger_write(spark, base, path, "o_year")
         ledger.ledger_merge(spark, path, updates, "o_orderkey")
         ledger.ledger_delete(spark, path, doomed, "o_orderkey")
@@ -171,8 +161,6 @@ def q_ledger_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -219,8 +207,6 @@ def q_ledger_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed (versions [1,2,3]). Deterministic forced-interleave proofs
     (CAS loss injection, overlap conflict, exactly-once across the
     rebase) live in tests/test_ledger.py."""
-    import shutil
-    import tempfile
     import threading
 
     from weather_api_automate_etl_spark.sources import ledger
@@ -245,8 +231,7 @@ def q_ledger_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") * F.lit(2.0)).alias("o_totalprice"),
         "o_year",
     )
-    path = tempfile.mkdtemp(prefix="ledger_occ_")
-    try:
+    with scratch("ledger_occ") as path:
         ledger.ledger_write(spark, base, path, "o_year")
         barrier = threading.Barrier(2)
         errors: list[BaseException] = []
@@ -280,8 +265,6 @@ def q_ledger_concurrent(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -324,8 +307,6 @@ def q_ledger_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     same O(live-dirs) listing + O(retained-manifests) JSON walk: driver
     metadata arithmetic, no table scan."""
     import os
-    import shutil
-    import tempfile
 
     from weather_api_automate_etl_spark.sources import ledger
 
@@ -340,8 +321,7 @@ def q_ledger_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") + F.lit(100.0)).alias("o_totalprice"),
         "o_year",
     )
-    path = tempfile.mkdtemp(prefix="ledger_vac_")
-    try:
+    with scratch("ledger_vac") as path:
         ledger.ledger_write(spark, base, path, "o_year")
         ledger.ledger_merge(spark, path, updates, "o_orderkey")
         dirs_before = {
@@ -362,8 +342,6 @@ def q_ledger_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -11,7 +11,7 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 
 # ---------------------------------------------------------------------------
 # streaming CDC consumer: APPLY CHANGES INTO the ledger, exactly-once
@@ -54,10 +54,9 @@ def q_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole log — batching, overlap, and delete interleaving must all be
     invisible — which is exactly the oracle."""
     import os
-    import shutil
-    import tempfile
 
     from weather_api_automate_etl_spark.sources import ledger
+    from weather_api_automate_etl_spark.streaming import events as stream_events
     from weather_api_automate_etl_spark.streaming import sinks
 
     name = "q_streaming_cdc_apply"
@@ -79,12 +78,11 @@ def q_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(mx * 0.35), int(mx * 0.75)),
         (int(mx * 0.70), mx),
     ]
-    stage = tempfile.mkdtemp(prefix=f"{name}_stage_")
-    table = tempfile.mkdtemp(prefix=f"{name}_table_")
-    shutil.rmtree(table)  # the sink bootstraps a missing table
-    ckpt = tempfile.mkdtemp(prefix=f"{name}_ckpt_")
-    ships = tempfile.mkdtemp(prefix=f"{name}_ships_")
-    try:
+    with scratch(name) as base:
+        stage, table, ckpt, ships = (
+            f"{base}/stage", f"{base}/table", f"{base}/ckpt", f"{base}/ships"
+        )
+        os.makedirs(stage)
         stream = spark.readStream.schema(
             "cust_id long, seq long, price double, op string, pt string"
         ).parquet(stage)
@@ -108,20 +106,12 @@ def q_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             log.withColumn("__ship", F.explode(membership))
             .coalesce(1)
             .write.partitionBy("__ship")
-            .parquet(os.path.join(ships, "data"))
+            .parquet(ships)
         )
         for i in range(len(ranges)):
-            # move the shipment to the stream root (file sources list the
-            # top level, not write-job subdirectories) — one file appears
-            # per drain, exactly as the per-shipment writes staged it
-            shipdir = os.path.join(ships, "data", f"__ship={i}")
-            part = next(
-                n for n in os.listdir(shipdir) if n.endswith(".parquet")
-            )
-            os.rename(
-                os.path.join(shipdir, part),
-                os.path.join(stage, f"ship_{i}.parquet"),
-            )
+            # one shipment appears in the stream root per drain, exactly
+            # as the per-shipment writes staged it
+            stream_events.stage(stage, f"ship_{i}", f"{ships}/__ship={i}")
             sinks.stream_apply_cdc_into_ledger(
                 stream, table, ckpt, name,
                 key="cust_id", seq_col="seq", partition_col="pt",
@@ -130,11 +120,6 @@ def q_streaming_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_id", "seq", "price", "op", "pt"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ships, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(table, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -437,8 +422,6 @@ def q_ledger_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     The dev-against-prod workflow: fork a 100 TB mart in O(partitions)
     driver JSON, test the migration on the fork, drop it."""
     import os
-    import shutil
-    import tempfile
 
     from weather_api_automate_etl_spark.sources import ledger
 
@@ -453,10 +436,8 @@ def q_ledger_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") + F.lit(100.0)).alias("o_totalprice"),
         "o_year",
     )
-    src = tempfile.mkdtemp(prefix="ledger_clone_src_")
-    dst = tempfile.mkdtemp(prefix="ledger_clone_dst_")
-    shutil.rmtree(dst)  # clone requires a fresh destination
-    try:
+    with scratch("ledger_clone") as work:
+        src, dst = f"{work}/src", f"{work}/dst"
         ledger.ledger_write(spark, base, src, "o_year")
         ledger.ledger_clone(src, dst)
         assert not [
@@ -483,9 +464,6 @@ def q_ledger_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         out = agg(src, "source").unionByName(agg(dst, "clone"))
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(dst, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -530,9 +508,6 @@ def q_ledger_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     a committed snapshot that holds one impossible. The readback must
     hash as the good-batch-only merged state — the rejected writes left
     no trace."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.sources import ledger
 
     orders = t(spark, sf_dir, "orders")
@@ -551,8 +526,7 @@ def q_ledger_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") * F.lit(-1.0)).alias("o_totalprice"),
         "o_year",
     )
-    path = tempfile.mkdtemp(prefix="ledger_check_")
-    try:
+    with scratch("ledger_check") as path:
         ledger.ledger_write(
             spark, base, path, "o_year",
             checks={"price_pos": "o_totalprice > 0"},
@@ -591,8 +565,6 @@ def q_ledger_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -644,8 +616,6 @@ def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     demonstrated equal to its batch semantics on bounded input."""
     import datetime as dt
     import os
-    import shutil
-    import tempfile
 
     from weather_api_automate_etl_spark.streaming import events as stream_events
 
@@ -655,8 +625,6 @@ def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mn = ev.agg(F.min("ts")).collect()[0][0]
     cutoff = mn + dt.timedelta(days=14)
-    stage = tempfile.mkdtemp(prefix=f"{name}_stage_")
-    sink = tempfile.mkdtemp(prefix=f"{name}_sink_")
     # a stream-stream join keeps 4 state stores per shuffle partition per
     # side, and every RESTART reloads all of them — at the session's 32
     # partitions the three drains spend their time in state-store churn,
@@ -665,73 +633,63 @@ def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
-        def ship(i: int, df) -> None:
-            shipdir = os.path.join(stage, f"_ship_{i}")
-            df.coalesce(1).write.parquet(shipdir)
-            part = next(
-                n for n in os.listdir(shipdir) if n.endswith(".parquet")
+        with scratch(name) as base:
+            stage, sink = f"{base}/stage", f"{base}/sink"
+            stream_events.stage(
+                stage, "ship_0", ev.filter(F.col("ts") <= F.lit(cutoff))
             )
-            os.rename(
-                os.path.join(shipdir, part),
-                os.path.join(stage, f"ship_{i}.parquet"),
+            stream = spark.readStream.schema(
+                "event_id long, ts timestamp, user_id long, "
+                "event_type string, value double"
+            ).parquet(stage)
+            joined = stream_events.clicks_with_optional_purchase(
+                stream, lookback_hours=1, watermark="1 hour"
             )
-            shutil.rmtree(shipdir, ignore_errors=True)
+            # drain 1: matches emit immediately; unmatched clicks park in
+            # state under the watermark this batch sets
+            stream_events.run_to_file_sink(joined, f"{sink}/data", f"{sink}/ckpt")
+            # late traffic on BOTH sides: each side's watermark advances
+            # only with its own rows (the per-side filters push below the
+            # watermark node — see the operator docstring), so the window
+            # close needs a late click AND a late purchase. Negative ids
+            # mark them synthetic; the readback filters them out. Written
+            # with pyarrow directly — a 2-row sentinel does not need a
+            # Spark write job. Both sentinel shipments land BEFORE the one
+            # restarted drain (round-13: the former per-shipment drain added
+            # a full micro-batch lifecycle whose only output was the +30
+            # sentinel click, which the readback filters; collapsing it is
+            # result-identical, oracle-verified at 3 SFs).
+            import pyarrow as pa
+            import pyarrow.parquet as pq
 
-        stream = spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, "
-            "event_type string, value double"
-        ).parquet(stage)
-        joined = stream_events.clicks_with_optional_purchase(
-            stream, lookback_hours=1, watermark="1 hour"
-        )
-        ship(0, ev.filter(F.col("ts") <= F.lit(cutoff)))
-        # drain 1: matches emit immediately; unmatched clicks park in
-        # state under the watermark this batch sets
-        stream_events.run_to_file_sink(joined, f"{sink}/data", f"{sink}/ckpt")
-        # late traffic on BOTH sides: each side's watermark advances
-        # only with its own rows (the per-side filters push below the
-        # watermark node — see the operator docstring), so the window
-        # close needs a late click AND a late purchase. Negative ids
-        # mark them synthetic; the readback filters them out. Written
-        # with pyarrow directly — a 2-row sentinel does not need a
-        # Spark write job. Both sentinel shipments land BEFORE the one
-        # restarted drain (round-13: the former per-shipment drain added
-        # a full micro-batch lifecycle whose only output was the +30
-        # sentinel click, which the readback filters; collapsing it is
-        # result-identical, oracle-verified at 3 SFs).
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        for i, days in enumerate((30, 60), start=1):
-            late_ts = mn + dt.timedelta(days=days)
-            pq.write_table(
-                pa.table(
-                    {
-                        "event_id": pa.array([-i, -100 - i], pa.int64()),
-                        "ts": pa.array([late_ts, late_ts],
-                                       pa.timestamp("us")),
-                        "user_id": pa.array([-1, -2], pa.int64()),
-                        "event_type": pa.array(["click", "purchase"]),
-                        "value": pa.array([None, 0.0], pa.float64()),
-                    }
-                ),
-                os.path.join(stage, f"ship_{i}.parquet"),
+            for i, days in enumerate((30, 60), start=1):
+                late_ts = mn + dt.timedelta(days=days)
+                pq.write_table(
+                    pa.table(
+                        {
+                            "event_id": pa.array([-i, -100 - i], pa.int64()),
+                            "ts": pa.array([late_ts, late_ts],
+                                           pa.timestamp("us")),
+                            "user_id": pa.array([-1, -2], pa.int64()),
+                            "event_type": pa.array(["click", "purchase"]),
+                            "value": pa.array([None, 0.0], pa.float64()),
+                        }
+                    ),
+                    os.path.join(stage, f"ship_{i}.parquet"),
+                )
+            # drain 2 (a RESTART against the shared checkpoint): opens by
+            # applying drain 1's committed watermark, processes the late
+            # sentinels, and its no-data batch applies the advanced
+            # watermark, flushing every parked click null-padded —
+            # exactly-once across the restart is what the shared
+            # checkpoint + file-sink log demonstrate.
+            stream_events.run_to_file_sink(joined, f"{sink}/data", f"{sink}/ckpt")
+            out = spark.read.parquet(f"{sink}/data").filter(
+                F.col("click_id") >= 0
             )
-        # drain 2 (a RESTART against the shared checkpoint): opens by
-        # applying drain 1's committed watermark, processes the late
-        # sentinels, and its no-data batch applies the advanced
-        # watermark, flushing every parked click null-padded —
-        # exactly-once across the restart is what the shared
-        # checkpoint + file-sink log demonstrate.
-        stream_events.run_to_file_sink(joined, f"{sink}/data", f"{sink}/ckpt")
-        out = spark.read.parquet(f"{sink}/data").filter(
-            F.col("click_id") >= 0
-        )
-        return out.localCheckpoint(eager=True)
+            return out.localCheckpoint(eager=True)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(sink, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -773,9 +731,6 @@ def q_ledger_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic (no wall-clock timestamps in manifests), so the audit
     itself is hash-checkable — and it reads zero data files, costing the
     same on a 100 TB mart as on this fixture."""
-    import shutil
-    import tempfile
-
     from weather_api_automate_etl_spark.sources import ledger
 
     orders = t(spark, sf_dir, "orders")
@@ -800,8 +755,7 @@ def q_ledger_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     doomed = base.filter(F.col("o_orderkey") % 7 == 0).select("o_orderkey")
-    path = tempfile.mkdtemp(prefix="ledger_hist_")
-    try:
+    with scratch("ledger_hist") as path:
         ledger.ledger_write(spark, base, path, "o_year")
         ledger.ledger_merge(spark, path, updates, "o_orderkey")
         ledger.ledger_delete(spark, path, doomed, "o_orderkey")
@@ -810,8 +764,6 @@ def q_ledger_history(spark: SparkSession, sf_dir: str) -> DataFrame:
             "version", "op", "n_partitions", "n_rows"
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

@@ -8,13 +8,11 @@ conventions in queries.py.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 
 
 # ---------------------------------------------------------------------------
@@ -47,33 +45,33 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     u = uuid.uuid4().hex[:10]
     ln, rn = f"q_smb_l_{u}", f"q_smb_r_{u}"
-    base = tempfile.mkdtemp(prefix="q_bucketed_join_")
-    try:
-        joins.write_bucketed(
-            t(spark, sf_dir, "lineitem").select(
-                "l_orderkey", "l_extendedprice", "l_discount"
-            ),
-            "l_orderkey", 8, ln, f"{base}/l",
-        )
-        joins.write_bucketed(
-            t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
-            "o_orderkey", 8, rn, f"{base}/r",
-        )
-        j = joins.bucketed_equi_join(spark, ln, rn, "l_orderkey", "o_orderkey")
-        result = (
-            j.groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_items"),
-                F.round(
-                    F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-                ).alias("revenue"),
+    with scratch("q_bucketed_join") as base:
+        try:
+            joins.write_bucketed(
+                t(spark, sf_dir, "lineitem").select(
+                    "l_orderkey", "l_extendedprice", "l_discount"
+                ),
+                "l_orderkey", 8, ln, f"{base}/l",
             )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {ln}")
-        spark.sql(f"DROP TABLE IF EXISTS {rn}")
-        shutil.rmtree(base, ignore_errors=True)
+            joins.write_bucketed(
+                t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority"),
+                "o_orderkey", 8, rn, f"{base}/r",
+            )
+            j = joins.bucketed_equi_join(spark, ln, rn, "l_orderkey", "o_orderkey")
+            result = (
+                j.groupBy("o_orderpriority")
+                .agg(
+                    F.count(F.lit(1)).alias("n_items"),
+                    F.round(
+                        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))),
+                        2,
+                    ).alias("revenue"),
+                )
+                .localCheckpoint(eager=True)
+            )
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {ln}")
+            spark.sql(f"DROP TABLE IF EXISTS {rn}")
     return result
 
 

@@ -8,12 +8,10 @@ conventions in queries.py.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 
 
 # ---------------------------------------------------------------------------
@@ -155,9 +153,7 @@ def q_ledger_repartition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year("o_orderdate").cast("string").alias("p_year"),
         (F.col("o_custkey") % 8).cast("string").alias("pt"),
     )
-    base = tempfile.mkdtemp(prefix="q_ledger_repartition_")
-    shutil.rmtree(base, ignore_errors=True)
-    try:
+    with scratch("q_ledger_repartition") as base:
         ledger.ledger_write(
             spark, od, base, "p_year", stats_cols=["o_totalprice"]
         )
@@ -180,8 +176,6 @@ def q_ledger_repartition(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return result
 
 

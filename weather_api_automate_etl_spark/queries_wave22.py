@@ -7,13 +7,11 @@ conventions in queries.py.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 
 
 @query(
@@ -44,8 +42,7 @@ def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the unpartitioned join; the oracle pins the answer. At 100 TB
     this is the difference between scanning two partitions and scanning
     seven years of fact data."""
-    base = tempfile.mkdtemp(prefix="q_dpp_")
-    try:
+    with scratch("q_dpp") as base:
         t(spark, sf_dir, "orders").withColumn(
             "o_year", F.year("o_orderdate")
         ).write.partitionBy("o_year").mode("overwrite").parquet(base)
@@ -67,8 +64,6 @@ def q_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return result
 
 
@@ -102,8 +97,7 @@ def q_csv_error_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently coerces or silently drops breaks the match."""
     from weather_api_automate_etl_spark.sources import formats
 
-    base = tempfile.mkdtemp(prefix="q_csv_route_")
-    try:
+    with scratch("q_csv_route") as base:
         (
             t(spark, sf_dir, "documents")
             .select(
@@ -135,6 +129,4 @@ def q_csv_error_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("n_bad", F.lit(n_bad).cast("long"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return result

@@ -7,12 +7,10 @@ conventions in queries.py.
 
 from __future__ import annotations
 
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 from weather_api_automate_etl_spark.queries_ext import _DOT_SQL
 
 _ORC_ORACLE = """
@@ -38,8 +36,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows) breaks the hash."""
     from weather_api_automate_etl_spark.sources import formats
 
-    base = tempfile.mkdtemp(prefix="q_orc_roundtrip_")
-    try:
+    with scratch("q_orc_roundtrip") as base:
         formats.write_orc(
             t(spark, sf_dir, "documents").select(
                 "doc_id", "lang", "source", "n_chars"
@@ -65,8 +62,6 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return result
 
 

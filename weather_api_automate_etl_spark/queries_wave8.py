@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from weather_api_automate_etl_spark.queries import query, t
+from weather_api_automate_etl_spark.queries import query, scratch, t
 from weather_api_automate_etl_spark.queries_ext import _DOT_SQL
 
 
@@ -269,8 +269,6 @@ def q_e2e_weather_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.1 composition with the corpus pipeline (fail-fast ordering +
     wall-time bound) lives in tests/test_e2e_pipeline.py."""
     import datetime as dt
-    import shutil
-    import tempfile
 
     from weather_api_automate_etl_spark.operators import marts
     from weather_api_automate_etl_spark.plans.pipeline import WeatherPipeline
@@ -279,8 +277,7 @@ def q_e2e_weather_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpointed so it no longer depends on the mart files, and the
     # working directory is removed before returning — no stranded mart
     # copies across bench/correctness sweeps
-    base = tempfile.mkdtemp(prefix="e2e_weather_")
-    try:
+    with scratch("e2e_weather") as base:
         pipe = WeatherPipeline(
             spark,
             raw_path=f"{base}/raw",
@@ -306,5 +303,3 @@ def q_e2e_weather_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_observations",
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)

@@ -9,16 +9,24 @@ via ``applyInPandasWithState`` — the custom-stateful-operator escape hatch.
 
 At scale these run unchanged: watermark state is bounded per window ×
 event_type; the stateful operator keys by user_id (state ∝ active users).
+
+It also owns the two mechanics every streaming query shares: ``stage``
+puts one input file into a file-stream source directory, and ``drain``
+runs a configured writer with availableNow to completion (stale
+same-name stop, timeout). The memory and file sinks here and the
+``foreachBatch`` sinks in streaming/sinks.py all drain through it.
 """
 
 from __future__ import annotations
 
-import datetime as dt
+import os
+import time
 from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 EVENT_SCHEMA = T.StructType(
@@ -162,24 +170,68 @@ def dedup_within_watermark(events: DataFrame, watermark: str = "2 hours") -> Dat
     )
 
 
+def stage(stage_dir: str, name: str, src: str | DataFrame) -> None:
+    """Stage one file, ``{name}.parquet``, into the file-stream source
+    directory ``stage_dir`` (made if missing) — every staged stream input
+    in the package comes through here. ``src`` is a fixture file, a
+    write job's output directory holding one part file, or a frame,
+    which is written as one file (``coalesce(1)``) into the hidden
+    ``_{name}`` subdirectory first. The staged name is a symlink, so a
+    fixture is never copied and staging the same file under N names
+    streams genuine duplicate rows. A file source skips ``_``-prefixed
+    entries, so each staged file is exactly one new input for the next
+    drain and the written subdirectory is never read."""
+    os.makedirs(stage_dir, exist_ok=True)
+    if isinstance(src, DataFrame):
+        written = os.path.join(stage_dir, f"_{name}")
+        src.coalesce(1).write.parquet(written)
+        src = written
+    if os.path.isdir(src):
+        src = next(
+            os.path.join(src, n) for n in os.listdir(src) if n.endswith(".parquet")
+        )
+    os.symlink(src, os.path.join(stage_dir, f"{name}.parquet"))
+
+
+def drain(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    query_name: str | None = None,
+    timeout_s: float = 120.0,
+) -> None:
+    """Run ``writer`` with availableNow until the source is drained — the
+    one start/await/timeout owner behind every sink in the package. A
+    named query first stops any active query of the same name and waits
+    (up to 10 s) until Spark deregisters it: deregistration is
+    asynchronous after ``awaitTermination``, and racing it trips Spark's
+    duplicate-name and concurrent-checkpoint guards. The wait sleeps only
+    while such a query is still active. Raises on timeout instead of
+    returning a partially drained sink."""
+    if query_name is not None:
+        deadline = time.monotonic() + 10.0
+        while time.monotonic() < deadline:
+            same = [a for a in spark.streams.active if a.name == query_name]
+            if not same:
+                break
+            for a in same:
+                a.stop()
+            time.sleep(0.2)
+        writer = writer.queryName(query_name)
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"stream {query_name or str(q.id)!r} did not drain within {timeout_s}s"
+        )
+
+
 def run_to_memory_sink(
     stream_df: DataFrame, query_name: str, timeout_s: float = 120.0,
     output_mode: str = "complete",
 ) -> None:
-    """Drain a stream with availableNow into a memory sink; raises on
-    timeout instead of silently returning a partially-drained table."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"stream {query_name!r} did not drain within {timeout_s}s"
-        )
+    """Drain a stream into the memory table ``query_name``."""
+    writer = stream_df.writeStream.format("memory").outputMode(output_mode)
+    drain(stream_df.sparkSession, writer, query_name, timeout_s)
 
 
 def run_to_file_sink(
@@ -189,25 +241,18 @@ def run_to_file_sink(
     timeout_s: float = 120.0,
     fmt: str = "parquet",
 ) -> None:
-    """Drain a stream with availableNow into a DURABLE file sink (append
-    mode + checkpoint) — the production landing-zone shape. The checkpoint
-    gives exactly-once file commits: a restarted query replays from the
-    offset log and never double-writes a batch, which is the property the
-    memory-sink drains can't demonstrate. Raises on timeout instead of
-    silently returning a partially-written directory."""
-    q = (
+    """Drain a stream into a DURABLE file sink (append mode + checkpoint)
+    — the production landing-zone shape. The checkpoint gives
+    exactly-once file commits: a restarted query replays from the offset
+    log and never double-writes a batch, which is the property the
+    memory-sink drains can't demonstrate."""
+    writer = (
         stream_df.writeStream.format(fmt)
         .option("path", path)
         .option("checkpointLocation", checkpoint)
         .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"file-sink stream to {path!r} did not drain within {timeout_s}s"
-        )
+    drain(stream_df.sparkSession, writer, timeout_s=timeout_s)
 
 
 def clicks_with_recent_purchase(

@@ -13,13 +13,23 @@ batch REPLAY, so the batch write must be idempotent per ``batch_id``.
 
 Same discipline as the batch side's per-interval dynamic overwrite
 (sources/json_ingest.py::append_raw): retries need idempotent sinks.
+
+Every sink here is a ``foreachBatch`` body handed to ``run_foreach_batch``,
+which drains through streaming/events.py::drain. The upserting bodies
+share two steps: ``_latest_per_key`` reduces a batch to one row per key,
+and ``_write_or_merge`` bootstraps a missing ledger from the first batch
+or merges into it, with the batch's ``txn`` either way.
 """
 
 from __future__ import annotations
 
-import time
+import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window, functions as F
+
+from weather_api_automate_etl_spark.operators import cdc, matview
+from weather_api_automate_etl_spark.sources import ledger
+from weather_api_automate_etl_spark.streaming import events
 
 
 def batch_writer(path: str, output_mode: str = "append"):
@@ -76,30 +86,52 @@ def run_foreach_batch(
     output_mode: str = "append",
     timeout_s: float = 120.0,
 ) -> None:
-    """The shared foreachBatch drain skeleton: stop leftover same-name
-    queries (deregistration is ASYNC after awaitTermination — racing it
-    trips Spark's concurrent-checkpoint guard), start with availableNow,
-    raise on timeout rather than returning a partial sink."""
-    spark = stream_df.sparkSession
-    deadline = time.monotonic() + 10.0
-    while time.monotonic() < deadline:
-        same = [a for a in spark.streams.active if a.name == query_name]
-        if not same:
-            break
-        for a in same:
-            a.stop()
-        time.sleep(0.2)
-    q = (
+    """The shared foreachBatch drain: a checkpointed ``write_batch`` sink
+    run through streaming/events.py::drain (stale same-name stop,
+    availableNow, raise on timeout rather than return a partial sink)."""
+    writer = (
         stream_df.writeStream.foreachBatch(write_batch)
-        .queryName(query_name)
         .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"stream {query_name!r} did not drain within {timeout_s}s")
+    events.drain(stream_df.sparkSession, writer, query_name, timeout_s)
+
+
+def _latest_per_key(
+    df: DataFrame, key: str, order_cols: tuple[str, ...]
+) -> DataFrame:
+    """Each key's latest row, ``order_cols`` descending — a merge needs
+    unique update keys, so every upserting batch body reduces to this."""
+    w = Window.partitionBy(key).orderBy(*[F.desc(c) for c in order_cols])
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def _ledger_exists(path: str) -> bool:
+    return os.path.exists(os.path.join(path, "_ledger"))
+
+
+def _write_or_merge(
+    df: DataFrame,
+    path: str,
+    key: str,
+    partition_col: str,
+    txn: tuple[str, int],
+    stats_cols: tuple[str, ...] = (),
+) -> None:
+    """Write the ledger at ``path`` if it is missing (the sink bootstraps
+    its table from the first batch), else merge ``df`` into it — both
+    carrying the same exactly-once ``txn`` watermark."""
+    if not _ledger_exists(path):
+        ledger.ledger_write(
+            df.sparkSession, df, path, partition_col,
+            stats_cols=stats_cols, txn=txn,
+        )
+    else:
+        ledger.ledger_merge(df.sparkSession, path, df, key, txn=txn)
 
 
 def stream_merge_into_mart(
@@ -124,21 +156,9 @@ def stream_merge_into_mart(
     rewrites identical content — which is exactly what makes checkpoint
     replay after a crash safe (the at-least-once batch redelivery lands
     the same mart state, the streaming/sinks.py module contract)."""
-    import os
-
-    from pyspark.sql import Window, functions as F
-
-    from weather_api_automate_etl_spark.operators import cdc
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy(key).orderBy(
-            *[F.desc(c) for c in order_cols]
-        )
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        latest = _latest_per_key(batch_df, key, order_cols)
         if not os.path.exists(mart_path):
             latest.write.partitionBy(partition_col).parquet(mart_path)
         else:
@@ -178,31 +198,12 @@ def stream_merge_into_ledger(
     the checkpoint replays any batch whose manifest commit didn't land,
     and the manifest commit dedupes any batch whose checkpoint mark
     didn't."""
-    import os
-
-    from pyspark.sql import Window, functions as F
-
-    from weather_api_automate_etl_spark.sources import ledger
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy(key).orderBy(
-            *[F.desc(c) for c in order_cols]
+        _write_or_merge(
+            _latest_per_key(batch_df, key, order_cols), table_path, key,
+            partition_col, (query_name, batch_id), stats_cols,
         )
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if not os.path.exists(os.path.join(table_path, "_ledger")):
-            ledger.ledger_write(
-                batch_df.sparkSession, latest, table_path, partition_col,
-                stats_cols=stats_cols, txn=(query_name, batch_id),
-            )
-        else:
-            ledger.ledger_merge(
-                batch_df.sparkSession, table_path, latest, key,
-                txn=(query_name, batch_id),
-            )
 
     run_foreach_batch(
         stream_df, write_batch, checkpoint_dir, query_name,
@@ -241,33 +242,14 @@ def stream_merge_with_mv(
     primitives. ``aggs_fn`` is a zero-arg callable returning the
     aggregate Columns (the view definition lives in code, only the sync
     watermark in state)."""
-    import os
-
-    from pyspark.sql import Window, functions as F
-
-    from weather_api_automate_etl_spark.operators import matview
-    from weather_api_automate_etl_spark.sources import ledger
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        w = Window.partitionBy(key).orderBy(
-            *[F.desc(c) for c in order_cols]
+        _write_or_merge(
+            _latest_per_key(batch_df, key, order_cols), table_path, key,
+            partition_col, (query_name, batch_id),
         )
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        if not os.path.exists(os.path.join(table_path, "_ledger")):
-            ledger.ledger_write(
-                spark, latest, table_path, partition_col,
-                txn=(query_name, batch_id),
-            )
-        else:
-            ledger.ledger_merge(
-                spark, table_path, latest, key, txn=(query_name, batch_id),
-            )
-        if not os.path.exists(os.path.join(mv_path, "_ledger")):
+        if not _ledger_exists(mv_path):
             matview.mv_build(
                 spark, table_path, mv_path, list(group_cols), aggs_fn()
             )
@@ -323,23 +305,11 @@ def stream_apply_cdc_into_ledger(
     ``stream_df`` must carry ``partition_col`` (the same stable
     key→partition contract as ledger_merge: a key's partition value
     never changes across events)."""
-    import os
-
-    from pyspark.sql import Window, functions as F
-
-    from weather_api_automate_etl_spark.sources import ledger
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        w = Window.partitionBy(key).orderBy(
-            F.col(seq_col).desc(), F.col(op_col).desc()
-        )
-        latest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        exists = os.path.exists(os.path.join(table_path, "_ledger"))
+        latest = _latest_per_key(batch_df, key, (seq_col, op_col))
+        exists = _ledger_exists(table_path)
         if exists:
             current = ledger.ledger_read(spark, table_path).select(
                 key, F.col(seq_col).alias("__cur_seq")
@@ -355,15 +325,12 @@ def stream_apply_cdc_into_ledger(
         latest = latest.localCheckpoint(eager=True)  # branch once, not twice
         ups = latest.filter(F.col(op_col) != delete_op)
         dels = latest.filter(F.col(op_col) == delete_op).select(key)
-        if not exists:
-            ledger.ledger_write(
-                spark, ups, table_path, partition_col,
-                stats_cols=list(stats_cols), txn=(query_name, batch_id),
-            )
-            return  # nothing to delete from a table that just bootstrapped
-        ledger.ledger_merge(
-            spark, table_path, ups, key, txn=(query_name, batch_id)
+        _write_or_merge(
+            ups, table_path, key, partition_col, (query_name, batch_id),
+            stats_cols,
         )
+        if not exists:
+            return  # nothing to delete from a table that just bootstrapped
         ledger.ledger_delete(
             spark, table_path, dels, key, txn=(f"{query_name}#del", batch_id)
         )
