@@ -95,7 +95,7 @@ def test_pack_sequences_empty_and_whitespace_docs(spark):
 
 
 def test_ewma_fold_matches_direct_formula(spark, monkeypatch):
-    from weather_api_automate_etl_spark import queries_advanced as qa
+    from weather_api_automate_etl_spark import queries_timeseries as qa
 
     # single user, values 1..5: trailing-8 frame covers the whole prefix
     rows = [(i, 1, float(i), f"2024-01-01 00:00:0{i}") for i in range(1, 6)]
@@ -103,7 +103,7 @@ def test_ewma_fold_matches_direct_formula(spark, monkeypatch):
         rows, "event_id long, user_id long, value double, ts string"
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     monkeypatch.setattr(
-        "weather_api_automate_etl_spark.queries_advanced.t",
+        "weather_api_automate_etl_spark.queries_timeseries.t",
         lambda s, d, n: df,
     )
     got = {
@@ -119,7 +119,7 @@ def test_ewma_fold_matches_direct_formula(spark, monkeypatch):
 
 
 def test_linreg_exact_line_and_constant_group(spark, monkeypatch):
-    from weather_api_automate_etl_spark import queries_advanced as qa
+    from weather_api_automate_etl_spark import queries_agg as qa
 
     # group A: exact line y = 3x + 2 → slope 3, intercept 2, r2 = 1
     # group B: constant x → degenerate variance, slope NULL (var_x = 0)
@@ -130,7 +130,7 @@ def test_linreg_exact_line_and_constant_group(spark, monkeypatch):
         rows, "l_returnflag string, l_quantity double, l_extendedprice double"
     )
     monkeypatch.setattr(
-        "weather_api_automate_etl_spark.queries_advanced.t",
+        "weather_api_automate_etl_spark.queries_agg.t",
         lambda s, d, n: df,
     )
     got = {r.l_returnflag: r for r in qa.q_linreg_by_group(spark, "x").collect()}
@@ -142,7 +142,7 @@ def test_linreg_exact_line_and_constant_group(spark, monkeypatch):
 
 
 def test_anomaly_iqr_flags_only_fence_breakers(spark, monkeypatch):
-    from weather_api_automate_etl_spark import queries_advanced as qa
+    from weather_api_automate_etl_spark import queries_agg as qa
 
     # 1..11 plus one far outlier 100: Q1=3.75, Q3=9.25, IQR=5.5 → hi=17.5
     rows = [(i, "e", float(i)) for i in range(1, 12)] + [(99, "e", 100.0)]
@@ -150,7 +150,7 @@ def test_anomaly_iqr_flags_only_fence_breakers(spark, monkeypatch):
         rows, "event_id long, event_type string, value double"
     )
     monkeypatch.setattr(
-        "weather_api_automate_etl_spark.queries_advanced.t",
+        "weather_api_automate_etl_spark.queries_agg.t",
         lambda s, d, n: df,
     )
     got = {r.event_id: r for r in qa.q_anomaly_iqr(spark, "x").collect()}

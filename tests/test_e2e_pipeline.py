@@ -28,7 +28,7 @@ def _composed_stages(spark, tmp_path, fail_staging_gate: bool = False):
     internal fail-fast is covered elsewhere); here it is one stage of the
     outer DAG, followed by the corpus pipeline materialization."""
     from weather_api_automate_etl_spark.operators import quality
-    from weather_api_automate_etl_spark.queries_mlprep import q_corpus_pipeline
+    from weather_api_automate_etl_spark.queries_dedup import q_corpus_pipeline
 
     state: dict[str, object] = {}
 

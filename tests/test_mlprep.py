@@ -228,6 +228,32 @@ def test_wide_input_guard_reads_catalyst_estimate(spark, tmp_path, monkeypatch):
     )
 
 
+def test_estimated_bytes_owns_the_size_estimate(spark, tmp_path):
+    """``layout.estimated_bytes`` is the one reader of Catalyst's size
+    estimate: a real byte count for a parquet-rooted plan, None for the
+    un-sizable sentinel. Its two consumers keep their own unknown-size
+    policy: the narrow guard leaves an unknown frame alone, the wide
+    guard reads it as not wide (pinned above)."""
+    from weather_api_automate_etl_spark.functions.layout import (
+        estimated_bytes,
+        spread_if_narrow,
+    )
+
+    p = str(tmp_path / "tiny.parquet")
+    spark.createDataFrame(
+        [(i, "alpha beta gamma") for i in range(20)],
+        "doc_id long, text string",
+    ).write.parquet(p)
+    scan = spark.read.parquet(p)
+    est = estimated_bytes(scan)
+    assert isinstance(est, int) and 0 < est < 1 << 20
+    par = spark.sparkContext.defaultParallelism
+    assert spread_if_narrow(scan).rdd.getNumPartitions() == par
+    rdd_rooted = spark.createDataFrame([(1, "alpha")], "doc_id long, text string")
+    assert estimated_bytes(rdd_rooted) is None
+    assert spread_if_narrow(rdd_rooted) is rdd_rooted
+
+
 # ---------------------------------------------------------------------------
 # semantic-dedup survivors
 # ---------------------------------------------------------------------------

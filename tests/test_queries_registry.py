@@ -194,3 +194,15 @@ def test_window_order_is_derived_from_evidence(monkeypatch, tmp_path):
     (tmp_path / "CORRECTNESS_r01.json").write_text('{"q_a": {}}')
     with pytest.raises(ValueError, match="malformed"):
         qmod._stalest_first(tmp_path)
+
+
+def test_stray_query_module_raises(monkeypatch, tmp_path):
+    """A sibling matching ``queries_*.py`` that is not a family module
+    (a numbered scratch or backup copy) fails the registry import loudly
+    instead of silently registering its queries."""
+    from weather_api_automate_etl_spark import queries as qmod
+
+    (tmp_path / "queries_text2.py").write_text("")
+    monkeypatch.setattr(qmod, "__file__", str(tmp_path / "queries.py"))
+    with pytest.raises(ImportError, match="queries_text2.py"):
+        qmod._load_extensions()

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from weather_api_automate_etl_spark.queries import REGISTRY, _load_extensions
-from weather_api_automate_etl_spark.queries_ext import _drain_stream
+from weather_api_automate_etl_spark.queries_streaming import _drain_stream
 from weather_api_automate_etl_spark.sources.tables import load_table
 
 from conftest import SF_SMALL

@@ -41,7 +41,7 @@ def test_late_events_classification_hand_case(spark):
     """Arrival order 1..5 within one type: t=10:00 (on-time), 10:20
     (on-time, advances), 10:15 (late, within 10 min of HWM 10:20), 10:05
     (dropped, >10 min behind), 10:30 (on-time)."""
-    from weather_api_automate_etl_spark.queries_wave11 import q_late_events  # noqa: F401
+    from weather_api_automate_etl_spark.queries_timeseries import q_late_events  # noqa: F401
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 

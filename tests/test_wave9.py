@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Row, functions as F
 
 from weather_api_automate_etl_spark.functions.core import zorder_key
-from weather_api_automate_etl_spark.queries_wave9 import _BPE_PLACEHOLDER
+from weather_api_automate_etl_spark.queries_text import _BPE_PLACEHOLDER
 from weather_api_automate_etl_spark.operators import quality, similarity, textops
 from weather_api_automate_etl_spark.sources.tables import load_table
 

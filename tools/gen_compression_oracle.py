@@ -5,7 +5,7 @@ the only hashable oracle for the zlib path is a LOOKUP TABLE: the decile
 histogram of level-6 deflate ratios computed independently of the engine
 (pyarrow + the stdlib zlib — no Spark, no DuckDB) for every testdata SF,
 keyed in SQL by the corpus row count. Re-run this tool and paste its
-output into queries_mlprep.py::_COMPRESSION_ORACLE whenever the fixture
+output into queries_text.py::_COMPRESSION_ORACLE whenever the fixture
 or the container's zlib build changes; tools/check_oracle.py fails loudly
 if the literals drift.
 

@@ -6,8 +6,7 @@ windows), then times the heavy operators on the replicated frame vs the
 base. Usage: python tools/stress_timeseries.py [N].
 
 Results are recorded in SCALING.md; re-run after touching any operator in
-operators/windows.py, operators/joins.py, or the queries_analytics
-time-series family.
+operators/windows.py, operators/joins.py, or queries_timeseries.py.
 """
 
 from __future__ import annotations

@@ -25,6 +25,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
+from weather_api_automate_etl_spark.functions.layout import estimated_bytes
 from weather_api_automate_etl_spark.functions.text import tokens, word_shingles
 from weather_api_automate_etl_spark.functions.vectors import (
     cosine_from_norms,
@@ -532,25 +533,19 @@ _WIDE_BYTES_PER_CORE = 256 * 1024 * 1024
 
 
 def _wide_input(df) -> bool:
-    """True when Catalyst's optimized-plan size estimate says ``df``'s
-    scan would arrive with roughly ≥ 2x the session parallelism in
-    splits. Uses ``optimizedPlan().stats().sizeInBytes`` (~15 ms even on
-    a deep regex upstream) and NOT ``df.rdd.getNumPartitions()``, which
-    compiles the full physical plan — measured 1.7-7 s per call on
-    q_corpus_pipeline's PII chain (round-13 A/B; the round-12 advice
-    caveat made real). The estimate propagates from parquet leaf sizes,
-    so single-file fixtures and the sf bench layouts stay far below the
-    threshold while a 100 TB corpus is orders of magnitude above it."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    if est >= 1 << 60:
-        # the defaultSizeInBytes sentinel: an RDD/Python-backed source
-        # Catalyst cannot size. Conservative = not wide (keep the
+    """True when Catalyst's size estimate (``layout.estimated_bytes``)
+    says ``df``'s scan would arrive with roughly ≥ 2x the session
+    parallelism in splits. Single-file fixtures and the sf bench layouts
+    stay far below the threshold while a 100 TB corpus is orders of
+    magnitude above it."""
+    est = estimated_bytes(df)
+    if est is None:
+        # a source Catalyst cannot size. Conservative = not wide (keep the
         # recompute form rather than checkpoint an unknown, possibly
         # tiny frame); every registry consumer is parquet-rooted and
         # gets a real estimate.
         return False
-    return est >= par * _WIDE_BYTES_PER_CORE
+    return est >= df.sparkSession.sparkContext.defaultParallelism * _WIDE_BYTES_PER_CORE
 
 
 def _span_inventory(df, id_col: str, text_col: str, k: int):

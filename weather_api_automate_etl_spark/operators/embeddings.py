@@ -16,7 +16,7 @@ toward +inf) instead of ``round()`` so Spark and the DuckDB oracle agree
 bit-for-bit on .5 boundaries; per-vector folds run in double in array
 order on both engines. Per-dimension AVG/VAR are aggregation-order
 sensitive in the last ulp, so standardized outputs are compared rounded
-(same convention as the IVF centroid probe, queries_ext.py).
+(same convention as the IVF centroid probe, queries_similarity.py).
 """
 
 from __future__ import annotations

@@ -36,7 +36,6 @@ from weather_api_automate_etl_spark.functions.layout import spread_if_narrow
 from weather_api_automate_etl_spark.functions.vectors import (
     cosine_similarity,
     cosine_similarity_sql,
-    dot_product,
     dot_product_sql,
     sql_ident,
     sql_vec_lit,

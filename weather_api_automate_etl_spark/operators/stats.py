@@ -6,7 +6,7 @@ Every function is DataFrame-in → DataFrame-out so the contract queries,
 the pytest differential tests, and the 20× stress harness all exercise
 the SAME expression tree (the duplication the round-5 review flagged).
 
-Engine-parity disciplines shared with queries_ext.py: quantile stats
+Engine-parity disciplines shared with the query oracles: quantile stats
 round to 6 before any comparison or division; subtractive-cancellation
 moment terms pass the RELATIVE variance floor (``VAR_REL_EPS``) before
 sqrt/divide — a constant series must yield NULL on every engine, not a

@@ -6,6 +6,11 @@ LLM-data-pipeline extensions (§2.7). ``__spark_entry__.py`` exposes this
 registry to the driver, which hash-compares each Spark result against its
 oracle at sf0.01 (row count + schema + order-insensitive value hash).
 
+A query's module is its family. This module holds the registry, the
+reference-DAG core queries (§2.1-2.5) and the oracle fragments that two or
+more families share; each ``queries_<family>.py`` (text, stats, dedup,
+similarity, ...) holds one family's queries and the fragments only it uses.
+
 Conventions that keep the hash comparison exact:
 - every computed column is aliased identically in Spark and SQL;
 - double aggregates are ``round()``-ed on both sides (sums of doubles are
@@ -16,8 +21,15 @@ Conventions that keep the hash comparison exact:
 - the Spark session runs in UTC (session.py) so timestamps hash identically;
 - content hashes are md5 (portable), never Spark ``hash()``;
 - dot products fold sequentially in double on both engines (Spark
-  ``aggregate``; DuckDB ``list_sum`` over an index-ordered transform), so
-  scores are bit-identical before the defensive round(6);
+  ``aggregate``; DuckDB ``list_sum`` over an index-ordered transform,
+  ``_DOT_SQL``), so scores are bit-identical before the defensive round(6);
+- DuckDB tokenizes text as ``_TOKENS_SQL`` (lower, trim, split on runs of
+  whitespace), the twin of ``functions/text.py``'s Spark tokenizer;
+- MinHash signatures and random-hyperplane LSH buckets have one SQL twin
+  each (``_MINHASH_SIG_SQL``, ``_lsh_oracle``), the synthetic-PII text one
+  derivation per engine (``_PII_AUG_SQL`` / ``_pii_aug_col``), and the
+  redaction SQL is rendered from ``operators/privacy.py``'s rules
+  (``_pii_rules_sql``);
 - DuckDB ``len()``/``row_number()`` return BIGINT where Spark returns int —
   oracles cast explicitly;
 - a query that writes (ledgers, marts, stream stages, checkpoints) does so
@@ -32,11 +44,10 @@ import shutil
 import tempfile
 from collections.abc import Callable, Iterator
 from contextlib import contextmanager
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 from weather_api_automate_etl_spark.functions.core import (
     ilike_recode,
@@ -45,7 +56,7 @@ from weather_api_automate_etl_spark.functions.core import (
     surrogate_key,
     temperature_category,
 )
-from weather_api_automate_etl_spark.operators import quality
+from weather_api_automate_etl_spark.operators import quality, similarity
 from weather_api_automate_etl_spark.sources.tables import load_table
 
 
@@ -53,15 +64,14 @@ from weather_api_automate_etl_spark.sources.tables import load_table
 class QuerySpec:
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
-    tags: tuple[str, ...] = field(default_factory=tuple)
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def query(name: str, oracle: str | None = None):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        REGISTRY[name] = QuerySpec(fn, oracle, tags)
+        REGISTRY[name] = QuerySpec(fn, oracle)
         return fn
 
     return deco
@@ -86,6 +96,123 @@ def scratch(name: str) -> Iterator[str]:
         yield base
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# Oracle fragments shared by two or more query families (conventions above)
+# ---------------------------------------------------------------------------
+
+_TOKENS_SQL = "regexp_split_to_array(lower(trim(text)), '\\s+')"
+
+_MINHASH_SIG_SQL = """
+    WITH base AS (
+      SELECT doc_id, lower(trim(text)) AS txt, {toks} AS tk FROM documents
+    ),
+    sh AS (
+      SELECT doc_id,
+             CASE WHEN len(tk) >= 3
+                  THEN [array_to_string(tk[i:i+2], ' ') FOR i IN range(1, len(tk) - 1)]
+                  ELSE [txt] END AS shingles
+      FROM base
+    ),
+    ex AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
+    mh AS (
+      SELECT doc_id, j, min(md5(CAST(j AS VARCHAR) || ':' || s)) AS mh
+      FROM ex CROSS JOIN (SELECT unnest(range(8)) AS j) js
+      GROUP BY doc_id, j
+    ),
+    sig AS (
+      SELECT doc_id, CAST(j // 2 AS INTEGER) AS band_id,
+             md5(string_agg(mh, ',' ORDER BY j)) AS bucket
+      FROM mh GROUP BY doc_id, j // 2
+    )
+""".format(toks=_TOKENS_SQL)
+
+_DOT_SQL = (
+    "list_sum(list_transform(range(1, len({a}) + 1), "
+    "i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
+)
+
+
+def _lsh_oracle(n_planes: int = 8, dim: int = 64) -> str:
+    terms = []
+    for p in range(n_planes):
+        vals = ", ".join(f"{v:.17e}" for v in similarity._hyperplane(p, dim))
+        proj = (
+            f"list_sum(list_transform(range(1, len(embedding) + 1), "
+            f"i -> CAST(embedding[i] AS DOUBLE) * list_value({vals})[i]))"
+        )
+        terms.append(f"CASE WHEN {proj} >= 0 THEN {1 << p} ELSE 0 END")
+    return (
+        "SELECT vec_id, CAST(" + " + ".join(terms) + " AS INTEGER) AS bucket FROM embeddings"
+    )
+
+
+#: the synthetic-PII augmentation (the fixture text carries no real PII, so
+#: the redaction path is exercised on deterministically generated contact
+#: strings appended to each doc — same derivation in Spark and the oracle)
+_PII_AUG_SQL = """
+    substr(text, 1, 40)
+    || ' contact user' || CAST(doc_id AS VARCHAR)
+    || '@mail' || CAST(doc_id % 7 AS VARCHAR)
+    || '.example.com call +1-555-'
+    || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
+    || '-' || lpad(CAST(doc_id * 3 % 10000 AS VARCHAR), 4, '0')
+    || ' ip 10.' || CAST(doc_id % 256 AS VARCHAR)
+    || '.' || CAST(doc_id * 3 % 256 AS VARCHAR)
+    || '.' || CAST(doc_id * 7 % 256 AS VARCHAR)
+    || ' card 4111-1111-1111-'
+    || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
+    || ' or 555' || lpad(CAST(doc_id * 11 % 10000000 AS VARCHAR), 7, '0')
+    || ' amex 3714-496353-' || lpad(CAST(doc_id * 13 % 100000 AS VARCHAR), 5, '0')
+"""
+
+
+def _pii_aug_col() -> "Column":  # noqa: F821
+    d = F.col("doc_id")
+    return F.concat(
+        F.substring("text", 1, 40),
+        F.lit(" contact user"), d.cast("string"),
+        F.lit("@mail"), (d % 7).cast("string"),
+        F.lit(".example.com call +1-555-"),
+        F.lpad((d % 1000).cast("string"), 3, "0"),
+        F.lit("-"),
+        F.lpad((d * 3 % 10000).cast("string"), 4, "0"),
+        F.lit(" ip 10."), (d % 256).cast("string"),
+        F.lit("."), (d * 3 % 256).cast("string"),
+        F.lit("."), (d * 7 % 256).cast("string"),
+        F.lit(" card 4111-1111-1111-"),
+        F.lpad((d % 10000).cast("string"), 4, "0"),
+        # contiguous 10-digit phone + Amex 4-6-5 card: raw forms with no
+        # separators, which a redactor keyed on the dashed forms misses
+        F.lit(" or 555"),
+        F.lpad((d * 11 % 10000000).cast("string"), 7, "0"),
+        F.lit(" amex 3714-496353-"),
+        F.lpad((d * 13 % 100000).cast("string"), 5, "0"),
+    )
+
+
+def _pii_rules_sql() -> tuple[str, str]:
+    """(redacted_expr, count_cols) SQL mirroring operators/privacy.py —
+    built from the SAME PII_RULES tuple so the twins cannot drift."""
+    from weather_api_automate_etl_spark.operators.privacy import PII_RULES
+
+    redacted = "raw"
+    counts = []
+    for kind, pattern, repl in PII_RULES:
+        lit = pattern.replace("'", "''")
+        redacted = f"regexp_replace({redacted}, '{lit}', '{repl}', 'g')"
+        counts.append(
+            f"CAST(len(regexp_extract_all(raw, '{lit}')) AS BIGINT) AS n_{kind}"
+        )
+    total = " + ".join(
+        f"len(regexp_extract_all(raw, '{p.replace(chr(39), chr(39) * 2)}'))"
+        for _, p, _ in PII_RULES
+    )
+    return redacted, ",\n           ".join(counts) + f",\n           ({total}) > 0 AS has_pii"
+
+
+_PII_REDACTED_SQL, _PII_COUNTS_SQL = _pii_rules_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -362,7 +489,6 @@ def q_join_fct_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WHERE CAST(json_extract_string(props, '$.k') AS INTEGER) IS NOT NULL
     """,
-    tags=("ingest",),
 )
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON decode + nested field extraction + coalesce fallback + bad-record
@@ -391,7 +517,6 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
            DATE '2026-01-01' AS extraction_date
     FROM region
     """,
-    tags=("ingest",),
 )
 def q_lineage_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write-time lineage columns — extracted_at DEFAULT CURRENT_TIMESTAMP
@@ -487,7 +612,6 @@ def q_test_accepted_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate <= TIMESTAMP '2001-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-    tags=("bench",),
 )
 def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q1-shaped pricing summary: the flagship scan+filter+agg.
@@ -527,7 +651,6 @@ def q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY revenue DESC, o_orderkey
     LIMIT 10
     """,
-    tags=("bench",),
 )
 def q_top_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H-Q3-shaped top-k revenue: join + agg + global top-k.
@@ -556,28 +679,17 @@ def q_top_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _load_extensions() -> None:
-    """Extension queries register themselves on import (kept in separate
-    modules so the core §2 inventory stays readable). Every sibling
-    ``queries_*`` module is imported, numerically ordered (wave4 before
-    wave40) — adding a wave file needs no edit here, and a typo'd module
-    name can't be silently skipped (the round-10 consolidation of the
-    former 56-line literal import list)."""
+    """Import every query-family module, each of which registers its
+    queries on import. A family module is ``queries_<family>.py`` with a
+    lowercase-letter family name; any other sibling matching
+    ``queries_*.py`` (a scratch or backup copy) raises ImportError instead
+    of silently registering its queries."""
     import importlib
     import re
-    from pathlib import Path
 
-    here = Path(__file__)
-    for p in sorted(
-        here.parent.glob("queries_*.py"),
-        key=lambda p: [
-            int(s) if s.isdigit() else s
-            for s in re.split(r"(\d+)", p.stem)
-        ],
-    ):
-        # a stray scratch/backup file matching the glob must fail loudly,
-        # not silently register queries (round-10 advice)
-        if not re.fullmatch(r"queries_(wave\d+|[a-z0-9]+)", p.stem):
-            raise ImportError(f"unexpected query-extension module: {p.name}")
+    for p in sorted(Path(__file__).parent.glob("queries_*.py")):
+        if not re.fullmatch(r"queries_[a-z]+", p.stem):
+            raise ImportError(f"unexpected query-family module: {p.name}")
         importlib.import_module(f"{__package__}.{p.stem}")
 
 
@@ -585,7 +697,7 @@ def _load_extensions() -> None:
 # verifies the first 50 entries per round and records them, in sample order,
 # as the keys of CORRECTNESS_rNN.json. The order is derived from those files:
 # ascending by the last round with a green row (rows_match and schema_match),
-# never-green counting as round 0; ties by sample order within that round's
+# never-green sorting first; ties by sample order within that round's
 # file, then by registration order. Each window is thus the 50 stalest
 # registered queries, so with 327 queries a green row is re-checked within
 # ceil(327/50) = 7 rounds. With no evidence files: registration order.

@@ -21,7 +21,7 @@ observed dtype: bigint takes **integer** division (``ts div 1000`` — ns
 epochs ~1.7e18 exceed double's 2^53 mantissa, so float division would
 corrupt microseconds) then casts to timestamp_ntz; native timestamps pass
 through. The DuckDB oracle mirrors both with ``CAST(ts AS TIMESTAMP)``.
-The streaming stager (queries_ext.py::_staged_event_stream) takes the
+The streaming stager (queries_streaming.py::_staged_event_stream) takes the
 dtype from the same cached schema before declaring its stream schema.
 """
 
