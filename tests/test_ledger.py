@@ -989,6 +989,53 @@ def test_concurrent_delete_and_merge_on_disjoint_partitions_rebase(
     assert len(got) == 29
 
 
+def test_compact_rebases_over_a_merge_into_another_partition(
+    spark, mart, tmp_path, monkeypatch
+):
+    """Compaction is scoped to the partitions it rewrites: a merge into
+    another partition that lands while it writes rebases under it, and
+    the table ends as merge-then-compact would leave it."""
+    path, df = mart
+    upd = spark.createDataFrame(
+        [(2, 222.0, "2002"), (300, 3.0, "2999")],
+        "k long, price double, year string",
+    )
+    twin = str(tmp_path / "twin")
+    ledger.ledger_write(spark, df, twin, "year")
+    ledger.ledger_merge(spark, twin, upd, "k")
+    ledger.ledger_compact(spark, twin, partitions=["2000"])
+
+    _inject_before_commit(
+        monkeypatch, lambda: ledger.ledger_merge(spark, path, upd, "k")
+    )
+    assert ledger.ledger_compact(spark, path, partitions=["2000"]) == 3
+    m2, m3 = (ledger._read_manifest(path, v) for v in (2, 3))
+    assert m3["op"] == "OPTIMIZE"
+    assert m3["partitions"]["2002"] == m2["partitions"]["2002"]
+    assert m3["partitions"]["2999"] == m2["partitions"]["2999"]
+    assert m3["partitions"]["2000"]["dir"] != m2["partitions"]["2000"]["dir"]
+    assert _snapshot(spark, path) == _snapshot(spark, twin)
+
+
+def test_add_check_does_not_rebase_over_a_concurrent_new_partition(
+    spark, mart, monkeypatch
+):
+    """ADD CONSTRAINT validated the snapshot it read. A partition a
+    competitor adds meanwhile was never checked, so the commit fails
+    instead of rebasing over it."""
+    path, _ = mart
+    upd = spark.createDataFrame(
+        [(300, -5.0, "2999")], "k long, price double, year string"
+    )
+    _inject_before_commit(
+        monkeypatch, lambda: ledger.ledger_merge(spark, path, upd, "k")
+    )
+    with pytest.raises(RuntimeError, match="commit conflict"):
+        ledger.ledger_add_check(spark, path, "price_nonneg", "price >= 0")
+    assert ledger._manifest_versions(path) == [1, 2]
+    assert ledger._read_manifest(path, 2)["checks"] is None
+
+
 # ---------------------------------------------------------------------------
 # RESTORE: metadata-only rollback as a forward commit
 # ---------------------------------------------------------------------------

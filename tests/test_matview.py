@@ -5,6 +5,8 @@ contract enforcement."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -105,6 +107,27 @@ def test_refresh_is_noop_without_base_change_and_on_replay(spark, tmp_path, base
     # replay: base unchanged since sync → same version, nothing written
     assert matview.mv_refresh(spark, base, mv, GROUP_COLS, _aggs()) == 2
     assert len(ledger._manifest_versions(mv)) == 2
+
+
+def test_metadata_only_base_change_refreshes_without_writing(
+    spark, tmp_path, base, count_jobs
+):
+    """A base version that moved for metadata-only reasons (ADD
+    CONSTRAINT) changes no partition: the refresh only advances the
+    MV's watermark, runs no Spark job and writes no data directory."""
+    mv = str(tmp_path / "mv")
+    matview.mv_build(spark, base, mv, GROUP_COLS, _aggs())
+    ledger.ledger_add_check(spark, base, "price_nonneg", "price >= 0")
+    before = sorted(os.listdir(mv))
+    jobs, v = count_jobs(
+        lambda: matview.mv_refresh(spark, base, mv, GROUP_COLS, _aggs())
+    )
+    assert (jobs, v) == (0, 2)
+    assert sorted(os.listdir(mv)) == before
+    m1, m2 = (ledger._read_manifest(mv, v) for v in (1, 2))
+    assert m2["txn"] == {matview._txn_app(base): 2}
+    assert m2["partitions"] == m1["partitions"]
+    assert _mv_equals_full(spark, base, mv)
 
 
 def test_contracts_raise(spark, tmp_path, base):

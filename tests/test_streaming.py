@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -339,3 +341,22 @@ def test_stream_merge_with_mv_syncs_and_replays_as_noop(spark, event_dir, tmp_pa
     sinks.stream_merge_with_mv(stream, table, mv, ckpt, "t_smv", **kwargs)
     assert ledger._manifest_versions(table)[-1] == base_v
     assert ledger._manifest_versions(mv)[-1] == mv_v
+
+
+def test_ledger_sink_bootstraps_over_an_empty_ledger_dir(spark, tmp_path):
+    """A crash between creating ``_ledger/`` and linking ``v1.json``
+    leaves the directory empty. The sink decides by manifest, so the
+    next batch bootstraps the table instead of merging into a table
+    that has no manifest."""
+    from weather_api_automate_etl_spark.sources import ledger
+    from weather_api_automate_etl_spark.streaming import sinks
+
+    path = str(tmp_path / "table")
+    os.makedirs(os.path.join(path, "_ledger"))
+    df = spark.createDataFrame(
+        [(1, 10.0, 0), (2, 20.0, 1)], "k long, v double, p long"
+    )
+    sinks._write_or_merge(df, path, "k", "p", ("q", 0))
+    assert ledger._manifest_versions(path) == [1]
+    got = ledger.ledger_read(spark, path).select("k", "v", "p").collect()
+    assert sorted(tuple(r) for r in got) == [(1, 10.0, 0), (2, 20.0, 1)]

@@ -151,7 +151,6 @@ def zorder_key(x: Column | str, y: Column | str, bits: int = 8) -> Column:
 
     Pure integer arithmetic (shift-mask-or unrolled per bit), identical in
     any engine; inputs must already be in [0, 2^bits)."""
-    from pyspark.sql import functions as F
 
     xc = F.col(x) if isinstance(x, str) else x
     yc = F.col(y) if isinstance(y, str) else y

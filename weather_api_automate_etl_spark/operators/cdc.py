@@ -91,9 +91,8 @@ def merge_into(
     The key frames feed ONLY semi/anti joins, whose results are
     insensitive to duplicate build-side rows (the hash relation dedupes
     keys by construction) — so neither side pays a pre-join
-    ``distinct()``: that extra exchange+aggregate per merge bought
-    nothing (round 13, guide §2.4), and on the provenance path it was
-    MART-scale. Result rows for duplicate-keyed updates are identical
+    ``distinct()``: that extra exchange+aggregate per merge would buy
+    nothing, and on the provenance path it would be MART-scale. Result rows for duplicate-keyed updates are identical
     either way: every duplicate still lands via the union arm.
     """
     upd_keys = updates.select(F.col(key))
@@ -138,7 +137,7 @@ def merge_into_partitioned(
     the merge reads ``mart_path`` and the dynamic overwrite rewrites the
     same path, and a lazy plan would make the write's input depend on the
     files it is deleting — safe only by the accident of staging order and
-    Spark-version-sensitive (round-6 advice). Checkpointing decouples the
+    Spark-version-sensitive. Checkpointing decouples the
     read from the overwrite: the touched partitions are fully read and
     pinned to executor-local storage before the first byte is staged. The
     checkpointed slice is batch-scale (touched partitions only), not

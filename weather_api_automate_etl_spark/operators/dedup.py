@@ -459,7 +459,6 @@ def cluster_survivors(
     One window over the cluster id after the CC label map — survivors are
     chosen per CLUSTER, not per pair, which is the whole point of running
     connected components after LSH (transitive near-dups)."""
-    from pyspark.sql.window import Window
 
     labeled = docs.join(dedup_clusters(docs, pairs, id_col), id_col)
     w = Window.partitionBy("cluster_id").orderBy(

@@ -43,7 +43,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from weather_api_automate_etl_spark.sources import ledger as lg
 
@@ -120,23 +120,16 @@ def mv_refresh(
         )
     if base_v <= synced_v:
         return mv_v
-    m_from = lg._read_manifest(base_path, synced_v)
-    pf, pt = m_from["partitions"], m_now["partitions"]
+    txn = (_txn_app(base_path), base_v)
     changed = sorted(
-        pv
-        for pv in set(pf) | set(pt)
-        # FULL-entry compare (matches ledger_changes): a dv-mode delete
-        # repoints only the tombstone sidecar, not the data dir
-        if pf.get(pv) != pt.get(pv)
+        lg._changed_partitions(lg._read_manifest(base_path, synced_v), m_now)
     )
-    if not changed:  # version moved for txn-only reasons; nothing to read
-        return lg.ledger_replace_partitions(
-            spark, mv_path, lg.ledger_read(spark, mv_path).filter(F.lit(False)),
-            [], txn=(_txn_app(base_path), base_v),
-        )
-    live = [pv for pv in changed if pv in pt]
+    if not changed:
+        # the base moved for metadata-only reasons: commit a version that
+        # only advances the watermark, with no data read or written
+        manifest = lg._next_manifest(mv_m, "REPLACE", mv_m["partitions"], txn)
+        return lg._commit_with_rebase(mv_path, mv_v, mv_m, manifest, set(), txn=txn)
+    live = [pv for pv in changed if pv in m_now["partitions"]]
     slice_now = lg._read_partitions(spark, base_path, m_now, live)
     out = _aggregate(slice_now, group_cols, aggs)
-    return lg.ledger_replace_partitions(
-        spark, mv_path, out, changed, txn=(_txn_app(base_path), base_v)
-    )
+    return lg.ledger_replace_partitions(spark, mv_path, out, changed, txn=txn)

@@ -738,7 +738,6 @@ def q_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast) because the statistic requires expected counts for
     UNOBSERVED cells too — the bug a naive groupBy-only version hides."""
     from weather_api_automate_etl_spark.functions.core import pg_hour
-    from weather_api_automate_etl_spark.operators import stats
 
     ev = t(spark, sf_dir, "events").select(
         "event_type", pg_hour("ts").alias("hour")
@@ -798,7 +797,6 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.1/0.25. Deliberate drift: a uniform +25% reprice shifts mass up a
     bin wherever a bin edge falls inside the scaled range, so several
     terms are decisively non-zero."""
-    from weather_api_automate_etl_spark.operators import stats
 
     orders = t(spark, sf_dir, "orders")
     old = orders.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -852,7 +850,6 @@ def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     not rows); totals ride a 1-row broadcast. Integer-count ratios make
     the ECDFs bit-identical across engines, so the single-row readout
     hash-matches with only the final round."""
-    from weather_api_automate_etl_spark.operators import stats
 
     orders = t(spark, sf_dir, "orders")
     a = orders.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -919,7 +916,6 @@ def q_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tracking source proportions between crawls. Emits the full per-bin
     decomposition; Σjs_term is the headline divergence. Same
     scan-rate shape as PSI: two count aggregates + a bins-sized grid."""
-    from weather_api_automate_etl_spark.operators import stats
 
     orders = t(spark, sf_dir, "orders")
     old = orders.filter(F.col("o_orderkey") % 2 == 0).select(
@@ -974,7 +970,6 @@ def q_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-range predicate — per-key fan-out is events-per-user-per-week,
     never a cross-user interval join — and the '(direct)' row keeps
     Σcredit = Σconversions auditable."""
-    from weather_api_automate_etl_spark.operators import stats
 
     return stats.linear_attribution(
         t(spark, sf_dir, "events"),

@@ -226,7 +226,6 @@ def q_scd2_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent reader can verify by inspection. operators/cdc.py::
     scd2_asof is a pure filter: partition-prunable, no join."""
     from weather_api_automate_etl_spark.operators import cdc
-    from weather_api_automate_etl_spark.queries_cdc import q_scd2
 
     dim = q_scd2(spark, sf_dir)
     return cdc.scd2_asof(dim, "2024-03-01").select(

@@ -522,7 +522,6 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs; ranks are N-normalized and rounded. Exercises the second
     iterative-dataflow shape (CC being the first): loop-invariant edges
     checkpointed once, one shuffle of (dst, mass) partials per round."""
-    from weather_api_automate_etl_spark.operators import graph
 
     docs = t(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs, "doc_id", "text", num_hashes=8, band_size=2)
@@ -601,7 +600,6 @@ def q_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
     data (upgraded from rows-only, the round-5 advice item); the
     quantitative gates (mass conservation, probe monotone to ε, agreement
     with a long fixed run) stay in tests/test_dedup_similarity.py."""
-    from weather_api_automate_etl_spark.operators import graph
 
     docs = t(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs, "doc_id", "text", num_hashes=8, band_size=2)
@@ -1193,7 +1191,6 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     SAME peeling as a recursive CTE (the q_pagerank_converged discipline:
     the twin derives its own round count from the data). Sparse fixtures
     may legitimately have an empty 2-core."""
-    from weather_api_automate_etl_spark.operators import dedup, graph
 
     docs = t(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(docs, "doc_id", "text", num_hashes=8, band_size=2)
@@ -1323,7 +1320,6 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     document fully quoted inside a long one scores 1.0 here while its
     Jaccard (q_ngram_jaccard) is near zero. Same inverted-index join
     shape, same blocking discipline."""
-    from weather_api_automate_etl_spark.operators import dedup
 
     return dedup.containment_pairs(
         t(spark, sf_dir, "documents"), "doc_id", "text",
@@ -1379,7 +1375,6 @@ def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_triangle_count's raw counts feed. The oracle replays the
     degree-ordered orientation and wedge closure, then joins degrees
     back for the ratio."""
-    from weather_api_automate_etl_spark.operators import dedup, graph
 
     docs = t(spark, sf_dir, "documents")
     sig = dedup.minhash_signatures(
@@ -1467,7 +1462,6 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate side is the production banded bucket join, and one
     full-outer join on the pair key classifies hits, misses, and
     false candidates with exact counts."""
-    from weather_api_automate_etl_spark.operators import dedup
 
     return dedup.lsh_recall_audit(
         t(spark, sf_dir, "documents"),
@@ -1510,7 +1504,6 @@ def q_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     dup_rate_by_source): one md5-keyed group aggregate, one
     co-partitioned join-back, one source rollup — same shuffle class
     as dedup_exact; cross-source copies count against every holder."""
-    from weather_api_automate_etl_spark.operators import corpus
 
     return corpus.dup_rate_by_source(
         t(spark, sf_dir, "documents"), "doc_id", "text", "source"

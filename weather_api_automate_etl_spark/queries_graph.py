@@ -108,7 +108,6 @@ def q_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-round cost is the frontier's edge neighborhood, never the
     transitive closure, which is what makes k-hop search tractable on a
     100 TB edge table. The oracle unrolls the same three rounds."""
-    from weather_api_automate_etl_spark.operators import graph
 
     li = t(spark, sf_dir, "lineitem")
     edges = li.select(
@@ -173,7 +172,6 @@ def q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the per-distance (count, id-sum) profile. Integer weights keep
     every distance exact; the oracle unrolls the same three relaxation
     rounds."""
-    from weather_api_automate_etl_spark.operators import graph
 
     li = t(spark, sf_dir, "lineitem")
     edges = li.select(
@@ -229,7 +227,6 @@ def q_org_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup at scale. The oracle walks each chain one level per
     recursive-CTE step; the operator must land on identical
     (root, depth) in logarithmically fewer rounds."""
-    from weather_api_automate_etl_spark.operators import graph
 
     parents = t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("node"),
@@ -289,7 +286,6 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic absent-edge ranking. Bipartite node ids (2·order /
     2·part+1) keep the two sides disjoint; pairs form on the shared
     neighbor (inverted index), existing edges leave by anti-join."""
-    from weather_api_automate_etl_spark.operators import graph
 
     e = (
         t(spark, sf_dir, "lineitem")
@@ -335,7 +331,6 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders, the asymmetric score PageRank's symmetric formulation
     collapses. The oracle unrolls auth→hub→auth with the same
     normalizations; ranking breaks ties on the part key."""
-    from weather_api_automate_etl_spark.operators import graph
 
     edges = (
         t(spark, sf_dir, "lineitem")

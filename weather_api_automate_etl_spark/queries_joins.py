@@ -210,7 +210,6 @@ def q_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-level form of Spark's runtime row-level Bloom pruning, available
     where the optimizer can't inject it (pre-filtered build sides,
     cross-job filter reuse, sink-side manifests)."""
-    from weather_api_automate_etl_spark.operators import joins
 
     line = t(spark, sf_dir, "lineitem")
     keys = (
@@ -246,7 +245,6 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the plain join — co-location must be invisible in the
     answer. This is THE layout decision that turns a daily 100 TB
     fact-to-fact join from a full two-sided shuffle into a local merge."""
-    from weather_api_automate_etl_spark.operators import joins
 
     u = uuid.uuid4().hex[:10]
     ln, rn = f"q_smb_l_{u}", f"q_smb_r_{u}"
@@ -330,7 +328,6 @@ def q_geo_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     same way, because the naive cross join is exactly what this
     operator exists to avoid. Distances round to 4 (0.1 m — far above
     trig ulp divergence)."""
-    from weather_api_automate_etl_spark.operators import joins
 
     cust = t(spark, sf_dir, "customer").select(
         "c_custkey",

@@ -210,7 +210,6 @@ def q_rare_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     absorbs a real long tail. The report pins both the post-collapse
     distribution and how many source categories each output level
     absorbed."""
-    from weather_api_automate_etl_spark.operators import stats
 
     base = t(spark, sf_dir, "orders").select(
         F.substring(

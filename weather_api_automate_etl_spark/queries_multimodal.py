@@ -348,7 +348,6 @@ def q_multimodal_decode_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     (image_stats). The oracle predicts every stat from the generation
     parameters; WebP and exotic TIFF beyond the pure-NumPy set route through the
     optional PIL plug point (codecs._pil_decode, skip-marked test)."""
-    from weather_api_automate_etl_spark.sources import multimodal
 
     assets = multimodal.documents_as_gif_assets(t(spark, sf_dir, "documents"))
     return multimodal.image_stats(assets)
@@ -485,7 +484,6 @@ def q_multimodal_decode_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     real codec behind the decode seam); codec fuzz (3200 roundtrip
     combos incl. grayscale photometrics) lives in
     tests/test_multimodal.py."""
-    from weather_api_automate_etl_spark.sources import multimodal
 
     assets = multimodal.documents_as_tiff_assets(t(spark, sf_dir, "documents"))
     return multimodal.image_stats(assets)
@@ -534,7 +532,6 @@ def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     any decode, packing, or endianness defect breaks the match. The
     image-side analogue of exact text dedup; Hamming-banding the same
     hash (q_simhash_pairs' pigeonhole) is the near-dup extension."""
-    from weather_api_automate_etl_spark.sources import multimodal
 
     assets = multimodal.documents_as_gradient_assets(
         t(spark, sf_dir, "documents")
@@ -591,7 +588,6 @@ def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     audio_frame_features) — the VAD/silence-gate primitives of an audio
     corpus pipeline. Every stat is an exact-arithmetic function of the
     generation formula, which is the oracle."""
-    from weather_api_automate_etl_spark.sources import multimodal
 
     assets = multimodal.documents_as_wav_assets(t(spark, sf_dir, "documents"))
     return multimodal.audio_frame_features(assets, win=8)

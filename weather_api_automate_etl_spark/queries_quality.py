@@ -135,7 +135,6 @@ def q_profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     input to schema drift detection. ONE aggregate for all columns (N
     columns never means N scans); the oracle recomputes each column's
     stats independently."""
-    from weather_api_automate_etl_spark.operators import quality
 
     return quality.profile_table(
         t(spark, sf_dir, "orders"), [c for c, _ in _PROFILE_COLS]
@@ -271,7 +270,6 @@ def q_profile_table_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit — this retired the registry's last rows-only fallback
     (round-8 verdict item 3). Error is the textbook 1.04/√m ≈ 13 % rsd,
     bounded against the exact profile in tests/test_wave12.py."""
-    from weather_api_automate_etl_spark.operators import quality
 
     return quality.profile_table(
         t(spark, sf_dir, "orders"),
@@ -528,7 +526,6 @@ def q_quality_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     beside a passing unique, two not_nulls, an accepted_values and a
     relationships rule. Each rule keeps its scan-rate plan; the suite
     unions six 1-row aggregates."""
-    from weather_api_automate_etl_spark.operators import quality
 
     li = t(spark, sf_dir, "lineitem")
     cust = t(spark, sf_dir, "customer")
@@ -599,7 +596,6 @@ def q_test_functional_dep(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max dependent sample. One determinant-keyed aggregate with
     map-side combine — the same shape as dbt's compiled unique test,
     one column wider."""
-    from weather_api_automate_etl_spark.operators import quality
 
     return quality.functional_dependency_violations(
         t(spark, sf_dir, "lineitem"), "l_partkey", "l_suppkey"
@@ -629,7 +625,6 @@ def q_test_monotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
     value so the break is self-explanatory. One window shuffle on the
     key; ties on the ordering are value-ordered so same-date rows
     cannot false-positive."""
-    from weather_api_automate_etl_spark.operators import quality
 
     return quality.monotonic_violations(
         t(spark, sf_dir, "orders"),

@@ -62,7 +62,6 @@ def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep everything. Keep decisions are content-hash thresholds —
     replayable, engine-portable — and the rate table is a broadcast join
     of a strata-cardinality aggregate."""
-    from weather_api_automate_etl_spark.operators import sampling
 
     docs = t(spark, sf_dir, "documents")
     shares = {f"src{k}": (k + 1) / 210.0 for k in range(20)}
@@ -91,7 +90,6 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     inclusion probability ∝ n_chars — operators/sampling.py::
     weighted_reservoir. The oracle evaluates the identical ln(u)/w key
     from the identical md5-derived uniform."""
-    from weather_api_automate_etl_spark.operators import sampling
 
     docs = t(spark, sf_dir, "documents")
     return sampling.weighted_reservoir(
@@ -124,7 +122,6 @@ def q_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_holdout_split). Per-fold size, language coverage, and mean length
     summarize balance; training fold i is a pushed-down ``fold != i``
     scan predicate, zero shuffle."""
-    from weather_api_automate_etl_spark.operators import sampling
 
     folded = sampling.kfold_assign(t(spark, sf_dir, "documents"), "doc_id", 5)
     return folded.groupBy("fold").agg(
@@ -188,7 +185,6 @@ def q_caliper_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass for both match directions, never a treated×control pairwise
     join; every distance/tiebreak comparison runs on exact raw doubles
     so the pick sequence is engine-reproducible."""
-    from weather_api_automate_etl_spark.operators import sampling
 
     ev = t(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "view")
@@ -250,7 +246,6 @@ def q_reshard_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     expressions (zero shuffle), one single-row aggregate. The measured
     fractions are the evidence behind choosing HRW placement for any
     growable 100 TB shard map."""
-    from weather_api_automate_etl_spark.operators import sampling
 
     return sampling.reshard_stability(
         t(spark, sf_dir, "documents"), "doc_id", 8, 9

@@ -48,7 +48,6 @@ def q_group_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows over the first 8 dimensions so the driver canonicalization stays
     array-free. One shuffle of (label, pos) partials; the assign step is
     driver-verified separately (q_centroid_assign)."""
-    from weather_api_automate_etl_spark.operators import similarity
 
     emb = t(spark, sf_dir, "embeddings")
     cents = similarity.centroids_by(emb, "embedding", "label")
@@ -370,7 +369,6 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_kmeans_fixed stays as the pinned-round control). Raw-double
     production fits keep their quantitative invariants in
     tests/test_dedup_similarity.py."""
-    from weather_api_automate_etl_spark.operators import similarity
 
     emb = t(spark, sf_dir, "embeddings")
     cents, rounds, converged = similarity.kmeans_fit(
@@ -850,7 +848,6 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break), so recall is an exact integer ratio and fully
     hash-oracle-able. The measured nprobe→recall curve at sf0.1 is
     recorded in SCALING.md."""
-    from weather_api_automate_etl_spark.operators import similarity
 
     emb = t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 10).select(
@@ -888,7 +885,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     the near-miss pairs a contrastive trainer needs. LSH buckets block the
     candidate space (never all-pairs), the label-inequality filter rides
     the join condition, exact cosine + per-anchor window top-k finish."""
-    from weather_api_automate_etl_spark.operators import similarity
 
     return similarity.hard_negative_pairs(
         t(spark, sf_dir, "embeddings"), "embedding", "label", dim=64, k=5, n_planes=6
@@ -973,7 +969,6 @@ def q_ann_recall_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-tenth the probe IO of label-blocking — this query pins that
     pipeline end-to-end with a DuckDB twin that re-derives codebook,
     assignment, probe, and recall declaratively."""
-    from weather_api_automate_etl_spark.operators import similarity
 
     emb = t(spark, sf_dir, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 10).select(
@@ -1053,7 +1048,6 @@ def q_pca_power_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     convergence assumption — and the axis is clamped to 6 digits before
     the map-only broadcast-literal projection. The oracle runs the same
     iteration as a recursive CTE over the (i, j, cov) matrix."""
-    from weather_api_automate_etl_spark.operators import embeddings as emb_ops
 
     return emb_ops.pca_power_project(
         t(spark, sf_dir, "embeddings"), "embedding", rounds=_POWER_ROUNDS
@@ -1129,7 +1123,6 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamped to integer nanos before any comparison (argmin AND ranking),
     so the DuckDB twin reproduces codes, ADC values, and the top-10 set
     exactly — encode, table build, lookup, and rank all hash-checked."""
-    from weather_api_automate_etl_spark.operators import embeddings as emb_ops
 
     emb = t(spark, sf_dir, "embeddings")
     cbs = emb_ops.pq_sampled_codebooks(emb, "vec_id", "embedding", 4, 8)
@@ -1246,7 +1239,6 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen: no Python, no shuffle before the TakeOrdered top-10. The
     oracle reproduces routing, codes, ADC values, and the result set
     exactly."""
-    from weather_api_automate_etl_spark.operators import embeddings as emb_ops
 
     emb = t(spark, sf_dir, "embeddings")
     coarse = emb_ops.pq_sampled_codebooks(emb, "vec_id", "embedding", 1, 4)
@@ -1263,7 +1255,6 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         s = 0.0
         for x, y in zip(a, b):
             s += (x - y) * (x - y)
-        import math
 
         return int(math.floor(s * 1e9 + 0.5))
 
@@ -1410,7 +1401,6 @@ def q_ann_ivfadc(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact double subtractions and every comparison clamps to integer
     nanos, so the oracle reproduces routing, residuals, codebooks,
     codes, per-cell tables, and the top-10 bit-exactly."""
-    from weather_api_automate_etl_spark.operators import embeddings as emb_ops
 
     emb = t(spark, sf_dir, "embeddings")
     coarse = emb_ops.pq_sampled_codebooks(emb, "vec_id", "embedding", 1, 4)
@@ -1543,7 +1533,6 @@ def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     one answer. Greedy comparisons run on unrounded, bit-identical dot
     products, so the oracle's five unrolled argmax CTEs reproduce the
     exact pick sequence."""
-    from weather_api_automate_etl_spark.operators import similarity
 
     emb = t(spark, sf_dir, "embeddings")
     qvec = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
@@ -1630,7 +1619,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     incomparable BM25/cosine scales — the reason RRF is the default
     hybrid merge. Both lists are TakeOrdered shortlists; the fusion
     window touches 100 rows, never the corpus."""
-    from weather_api_automate_etl_spark.operators import similarity, textops
+    from weather_api_automate_etl_spark.operators import textops
 
     docs = t(spark, sf_dir, "documents")
     emb = t(spark, sf_dir, "embeddings")
@@ -1690,7 +1679,6 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     The eval every hybrid-retrieval change gates on: if semantic search
     stops surfacing lexically relevant docs, this number drops. System
     cut and ideal cut are both TakeOrdered heads on engine-exact keys."""
-    from weather_api_automate_etl_spark.operators import similarity
     from weather_api_automate_etl_spark.functions.text import tokens
 
     docs = t(spark, sf_dir, "documents")
@@ -1756,7 +1744,6 @@ def q_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     is junk. The query set rides broadcast into ONE scored join (no
     driver loop); the per-query rank filter is a WindowGroupLimit
     top-k, not a full sort."""
-    from weather_api_automate_etl_spark.operators import similarity
 
     return similarity.mrr_at_k(
         t(spark, sf_dir, "embeddings"),

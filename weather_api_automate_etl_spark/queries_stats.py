@@ -732,8 +732,6 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     after a (group, day) pre-aggregate collapses raw events."""
     from weather_api_automate_etl_spark.operators import stats
 
-    from pyspark.sql import functions as F
-
     ev = t(spark, sf_dir, "events")
     return stats.mann_kendall_trend(
         ev.withColumn("day", F.to_date("ts")), "event_type", "day"

@@ -338,7 +338,6 @@ def q_streaming_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from weather_api_automate_etl_spark.functions.text import (
         document_fingerprint,
     )
-    from weather_api_automate_etl_spark.queries_streaming import _drain_stream
 
     def build(stream: DataFrame) -> DataFrame:
         return (
@@ -436,9 +435,7 @@ def q_streaming_ledger_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-latest-per-user over the whole stream, exactly the
     q_streaming_merge_sink contract upgraded from Hive-layout dynamic
     overwrite to atomic manifest swap."""
-    from weather_api_automate_etl_spark.queries_streaming import _staged_event_stream
     from weather_api_automate_etl_spark.sources import ledger
-    from weather_api_automate_etl_spark.streaming import events as stream_events
     from weather_api_automate_etl_spark.streaming import sinks
 
     name = "q_streaming_ledger_sink"
@@ -492,9 +489,7 @@ def q_streaming_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the oracle. The reference's closest shape is a full dbt
     rebuild per schedule; this is the 100 TB replacement: the mart AND
     its rollup stay in sync touching only what each batch changed."""
-    from weather_api_automate_etl_spark.queries_streaming import _staged_event_stream
     from weather_api_automate_etl_spark.sources import ledger
-    from weather_api_automate_etl_spark.streaming import events as stream_events
     from weather_api_automate_etl_spark.streaming import sinks
 
     name = "q_streaming_mv"
@@ -568,8 +563,6 @@ def q_streaming_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     demonstrated equal to its batch semantics on bounded input."""
     import datetime as dt
     import os
-
-    from weather_api_automate_etl_spark.streaming import events as stream_events
 
     name = "q_streaming_left_join"
     ev = t(spark, sf_dir, "events").select(

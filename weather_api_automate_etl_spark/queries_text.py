@@ -402,7 +402,6 @@ def q_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The data-mixture table: per (lang, source) doc counts, char mass and
     corpus shares — shares via window sums over the strata-sized aggregate
     (operators/corpus.py::source_mix)."""
-    from weather_api_automate_etl_spark.operators import corpus
 
     return corpus.source_mix(t(spark, sf_dir, "documents"))
 
@@ -432,7 +431,6 @@ def q_pack_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     concat-and-chunk lower bound, pad-per-doc efficiency, overflow count
     (operators/corpus.py::pack_estimate). One map-side-combined aggregate."""
     from weather_api_automate_etl_spark.functions.text import bpe_ish_token_count
-    from weather_api_automate_etl_spark.operators import corpus
 
     return corpus.pack_estimate(
         t(spark, sf_dir, "documents"),
@@ -470,7 +468,6 @@ def q_pack_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a pure window cumsum — one shuffle on the stratum key, the actual
     packing step a training-data loader consumes."""
     from weather_api_automate_etl_spark.functions.text import bpe_ish_token_count
-    from weather_api_automate_etl_spark.operators import corpus
 
     return corpus.pack_assign(
         t(spark, sf_dir, "documents"),
@@ -538,7 +535,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny vocabulary needs k=5 for a non-degenerate report). The benchmark
     gram table is broadcast; the corpus side is map-side array math + one
     distinct + one equi-join."""
-    from weather_api_automate_etl_spark.operators import corpus
 
     docs = t(spark, sf_dir, "documents")
     return corpus.decontaminate(
@@ -569,7 +565,6 @@ def q_length_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     last bin (bin_hi NULL) — the length-distribution profile a filtering
     config is tuned against. One aggregate; shares windowed over the
     12-row result."""
-    from weather_api_automate_etl_spark.operators import corpus
 
     return corpus.length_histogram(
         t(spark, sf_dir, "documents"), "n_chars", bin_width=50, n_bins=12
@@ -1044,7 +1039,6 @@ def q_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     bpe_pair_counts) — the statistic every BPE tokenizer-training round
     maximizes over. Token split + per-token substring windows + one
     explode + one count aggregate: corpus-linear, join-free."""
-    from weather_api_automate_etl_spark.operators import textops
 
     return textops.bpe_pair_counts(t(spark, sf_dir, "documents"))
 
@@ -1090,7 +1084,6 @@ def q_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant baked into the plan), so unrolling more rounds stays fully
     declarative. The final top-10 window runs over the vocabulary-scale
     aggregate (the documented metadata-scale WindowExec invariant)."""
-    from weather_api_automate_etl_spark.operators import textops
 
     return textops.bpe_merge_once(
         t(spark, sf_dir, "documents"), placeholder=_BPE_PLACEHOLDER, top_n=10
@@ -1145,7 +1138,6 @@ def q_bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     Round r's winner depends on rounds < r having been applied, so any
     drift in the merge application surfaces as a different later
     winner."""
-    from weather_api_automate_etl_spark.operators import textops
 
     return textops.bpe_merge_rounds(
         t(spark, sf_dir, "documents"), n_rounds=3, placeholders=_BPE_SYMBOLS
@@ -1153,10 +1145,6 @@ def q_bpe_merge_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_encode_oracle(n_rounds: int = 3) -> str:
-    from weather_api_automate_etl_spark.queries import _TOKENS_SQL
-    from weather_api_automate_etl_spark.queries_text import _BPE_PAIRS_SQL
-    from weather_api_automate_etl_spark.queries_text import _BPE_SYMBOLS
-
     ctes = [_BPE_PAIRS_SQL.rstrip()]
     prev_tok = "tok"
     for r in range(n_rounds):
@@ -1231,8 +1219,6 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     leave the cluster as anything but a 1-row broadcast. The oracle
     re-learns the same three winners in unrolled CTEs and re-encodes
     with nested replace(), so a drift in either phase breaks the hash."""
-    from weather_api_automate_etl_spark.operators import textops
-    from weather_api_automate_etl_spark.queries_text import _BPE_SYMBOLS
 
     docs = t(spark, sf_dir, "documents")
     table = textops.bpe_merge_rounds(
@@ -1288,7 +1274,6 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same scores), trading exactness for a sort-free broadcast
     filter, which is why the bucket boundary, not the mechanism, is the
     only thing that changes at scale."""
-    from weather_api_automate_etl_spark.operators import textops
     from pyspark.sql.window import Window
 
     scored = textops.unigram_logprob(t(spark, sf_dir, "documents")).select(
@@ -1313,10 +1298,6 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_fertility_oracle() -> str:
-    from weather_api_automate_etl_spark.queries_text import (
-        _bpe_encode_oracle,
-    )
-
     return f"""
     SELECT d.lang,
            CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -1344,8 +1325,6 @@ def q_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one broadcast join to the lang column and one aggregate; the
     ratios divide exact integer sums, so they are bit-identical
     cross-engine under round(6)."""
-    from weather_api_automate_etl_spark.operators import textops
-    from weather_api_automate_etl_spark.queries_text import _BPE_SYMBOLS
 
     docs = t(spark, sf_dir, "documents")
     table = textops.bpe_merge_rounds(
@@ -1406,7 +1385,6 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus, dim=64 — the cheap model-free data-selection score. The
     feature table is O(dim), the join back is a broadcast; nothing
     grows with the corpus but the scans."""
-    from weather_api_automate_etl_spark.operators import corpus
 
     return corpus.dsir_importance(
         t(spark, sf_dir, "documents"), F.col("lang") == "en", dim=64
@@ -1446,7 +1424,6 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     floored at 1 — the classic complexity screen beside the length/
     stopword quality gates. Pure codegen regex + one array fold; the
     regex subset has identical Java-regex/RE2 semantics."""
-    from weather_api_automate_etl_spark.operators import textops
 
     return textops.readability_scores(t(spark, sf_dir, "documents"))
 
@@ -1507,7 +1484,6 @@ def q_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id%100==0 slice and scores the other 99%, so unseen-bigram
     backoff (the operator's point) fires thousands of times in-pipeline.
     n_backoff per doc is the held-out-coverage diagnostic."""
-    from weather_api_automate_etl_spark.operators import textops
 
     return textops.stupid_backoff_logprob(
         t(spark, sf_dir, "documents"), F.col("doc_id") % 100 == 0
@@ -1550,7 +1526,6 @@ def q_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the collocation-locked words KN was invented for), and the
     discount mass conservation Σ_b P_KN(b|a) = 1 is pinned per history
     in test_wave25."""
-    from weather_api_automate_etl_spark.operators import textops
 
     return textops.kneser_ney_bigram(
         t(spark, sf_dir, "documents"), "text", discount=0.75
@@ -1627,7 +1602,6 @@ def q_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     on |V|+|E| rows. Composes the proven zip_with pair extraction with
     the q_pagerank kernel (loop-invariant edges checkpointed once,
     dangling mass redistributed). Cut keys are rounded rank + word."""
-    from weather_api_automate_etl_spark.operators import textops
 
     return textops.textrank_keywords(
         t(spark, sf_dir, "documents"), "text",
@@ -1671,7 +1645,6 @@ def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join; exact BIGINT counts everywhere, r* NULL where
     S(r+1) = 0 (the classical estimator's undefined region, reported
     honestly rather than smoothed)."""
-    from weather_api_automate_etl_spark.operators import textops
 
     return textops.good_turing_counts(
         t(spark, sf_dir, "documents"), "text", max_r=10, shingle_k=3
@@ -1745,7 +1718,6 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     Prefix buckets come from exact BIGINT range arithmetic over the
     broadcast (min, max) id span — no ntile / global sort over the doc
     relation (round-9 verdict item 3)."""
-    from weather_api_automate_etl_spark.operators import textops
 
     return textops.heaps_law(
         t(spark, sf_dir, "documents"), "doc_id", "text", n_buckets=10

@@ -928,7 +928,6 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-6-clamped, so the full window+aggregate pipeline hash-matches
     the declarative twin; identity (y = t+s+r where defined) and
     gap-robust phase anchoring are pinned in tests/test_wave4.py."""
-    from weather_api_automate_etl_spark.operators import timeseries
 
     ev = t(spark, sf_dir, "events").filter(
         F.col("event_type").isNotNull() & F.col("ts").isNotNull()
@@ -983,7 +982,6 @@ def q_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     l₁=y₁, b₁=y₂−y₁, recursion from t=2. One aggregate to the monthly
     grain, one fold per series — sequential in t, parallel across
     series."""
-    from weather_api_automate_etl_spark.operators import timeseries
 
     monthly = (
         t(spark, sf_dir, "orders")
@@ -1049,7 +1047,6 @@ def q_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     ring). The per-series state is O(m); the oracle's recursive CTE
     carries the same ring as a LIST and reproduces every float op in
     order."""
-    from weather_api_automate_etl_spark.operators import timeseries
 
     ev = t(spark, sf_dir, "events")
     daily = ev.groupBy(
@@ -1100,7 +1097,6 @@ def q_backtest_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     MAE, skill < 1 ⇔ weekly seasonality carries real signal — the
     go/no-go gate before trusting q_holt_winters' seasonal state.
     Integer counts ⇒ exact errors; two lag windows, zero self-joins."""
-    from weather_api_automate_etl_spark.operators import timeseries
 
     ev = t(spark, sf_dir, "events")
     return timeseries.backtest_seasonal_naive(
@@ -1148,7 +1144,6 @@ def q_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines draw identical limits and flag identical days — the
     retrospective phase-I chart (limits from the charted window,
     stated plainly in the operator docstring)."""
-    from weather_api_automate_etl_spark.operators import timeseries
 
     ev = t(spark, sf_dir, "events")
     return timeseries.control_chart(
@@ -1193,7 +1188,6 @@ def q_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean): each surviving row is a complete training example; the
     7-day warm-up prefix drops so no NULL reaches a fit. Exact integer
     lags and window sums; one window pass per series."""
-    from weather_api_automate_etl_spark.operators import timeseries
 
     ev = t(spark, sf_dir, "events")
     return timeseries.lag_features(
@@ -1245,7 +1239,6 @@ def q_cross_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-join run on that tiny table (AQE broadcasts it), and each
     lag's Pearson r comes from exact-integer moment sums behind the
     shared relative variance floor."""
-    from weather_api_automate_etl_spark.operators import timeseries
 
     ev = t(spark, sf_dir, "events")
     return timeseries.cross_correlation(

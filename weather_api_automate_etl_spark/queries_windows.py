@@ -335,7 +335,6 @@ def q_path_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     miner pairwise transitions can't see. One per-user window shuffle
     (two stacked leads), one count, deterministic lexicographic
     tie-break, TakeOrdered top-k."""
-    from weather_api_automate_etl_spark.operators import windows
 
     return windows.path_ngrams(
         t(spark, sf_dir, "events"), "user_id", ["ts", "event_id"],
@@ -381,7 +380,6 @@ def q_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax tie-breaks to the earliest start. Raw events collapse to
     distinct (user, day) first, so per-user window state is
     calendar-bounded."""
-    from weather_api_automate_etl_spark.operators import windows
 
     return windows.longest_streak(
         t(spark, sf_dir, "events"), "user_id", F.to_date("ts")
@@ -437,7 +435,6 @@ def q_interval_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id shared by both window passes and the island aggregate. The
     running-max-end island rule handles containment (a long interval
     swallowing later short ones), which naive lag(end) misses."""
-    from weather_api_automate_etl_spark.operators import windows
 
     ev = t(spark, sf_dir, "events")
     start = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -471,7 +468,6 @@ def q_rolling_actives(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; the ×7 contribute-forward explode runs on the deduped
     grain, and target days clamp to the data's own day set via a tiny
     broadcast."""
-    from weather_api_automate_etl_spark.operators import windows
 
     return windows.rolling_active_users(
         t(spark, sf_dir, "events"), "user_id", "ts", window_days=7
@@ -502,7 +498,6 @@ def q_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_vs_returning): per-user first-day aggregate joined back on the
     user key the grain is already partitioned by, then one day
     rollup — exact counts everywhere."""
-    from weather_api_automate_etl_spark.operators import windows
 
     return windows.new_vs_returning(
         t(spark, sf_dir, "events"), "user_id", "ts"
@@ -541,7 +536,6 @@ def q_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     rolling_active_users at w=1 joined with w=7): the engagement-depth
     ratio — WAU ≥ DAU by construction so the division never needs a
     zero guard on observed days."""
-    from weather_api_automate_etl_spark.operators import windows
 
     ev = t(spark, sf_dir, "events")
     dau = windows.rolling_active_users(

@@ -40,7 +40,17 @@ Stores", VLDB 2020):
   append/merge-heavy table develops is fixed by a background writer;
 - old versions stay readable (time travel / stale-reader safety) until
   ``vacuum`` drops manifests beyond a retention count and deletes data
-  directories no retained manifest references.
+  directories no retained manifest references;
+- every operation but ``ledger_write`` derives its next manifest from the
+  current one (``_next_manifest``) and commits by one of two rules. An
+  operation scoped to partitions (merge, replace, delete, compact) commits
+  through ``_commit_with_rebase`` with its touched set, so a concurrent
+  commit to other partitions rebases under it. An operation whose read
+  set is the whole table (write, clone, add_check, restore, repartition)
+  commits with the plain CAS ``_commit`` and fails on any concurrent
+  commit: a rebase would keep partitions a competitor added outside its
+  read set, e.g. an unchecked partition under a new CHECK, or keys of the
+  old partition spec in a repartitioned table.
 
 Scale shape: the manifest is PARTITION-granular — O(live partitions)
 JSON, metadata-scale (a 100 TB mart at daily grain is a few thousand
@@ -104,8 +114,8 @@ def _commit(path: str, manifest: dict, version: int) -> None:
     POSIX link(2) fails with EEXIST atomically when the target already
     exists, so two writers racing to commit the same version CANNOT both
     succeed — the loser gets a commit conflict instead of silently
-    clobbering the winner (the round-7 exists-check-then-rename pair was
-    a TOCTOU window two local writers could still lose). This is the
+    clobbering the winner (an exists-check followed by a rename leaves a
+    TOCTOU window two local writers can both pass). This is the
     local-filesystem form of the CAS Delta gets from a coordinating
     LogStore on S3; readers either see the complete new manifest or none
     of it, exactly as before."""
@@ -150,6 +160,53 @@ def _changed_partitions(base_m: dict, latest_m: dict) -> set[str]:
     }
 
 
+def _replayed(m: dict, txn: tuple[str, int] | None) -> bool:
+    """Has ``m`` already applied ``txn=(app_id, txn_id)``? An id not above
+    the app's recorded watermark is a replay."""
+    return txn is not None and txn[1] <= m.get("txn", {}).get(txn[0], -1)
+
+
+def _max_watermarks(*maps: dict[str, int]) -> dict[str, int]:
+    """Per-app MAX of exactly-once watermark maps. Watermarks are
+    monotone, so carrying a stale value for an app another commit
+    advanced can never roll that app's floor backwards."""
+    out: dict[str, int] = {}
+    for wm in maps:
+        for app, t in wm.items():
+            out[app] = max(out.get(app, t), t)
+    return out
+
+
+def _next_manifest(
+    m: dict,
+    op: str,
+    partitions: dict[str, dict],
+    txn: tuple[str, int] | None = None,
+    **changes,
+) -> dict:
+    """The manifest an operation commits on top of ``m``: every field
+    carries over except ``op``, the partition mapping, the watermarks
+    (``txn`` joins them at per-app max) and the fields in ``changes``."""
+    return {
+        **m,
+        "op": op,
+        "txn": _max_watermarks(m.get("txn", {}), dict([txn] if txn else [])),
+        "partitions": partitions,
+        **changes,
+    }
+
+
+def _partition_values(df: DataFrame, pcol: str) -> set[str | None]:
+    """The distinct partition values ``df`` carries, in the manifest's raw
+    cast-to-string key form (one Spark job)."""
+    return {
+        r["__pv"]
+        for r in df.select(F.col(pcol).cast("string").alias("__pv"))
+        .distinct()
+        .collect()
+    }
+
+
 def _commit_with_rebase(
     path: str,
     base_version: int,
@@ -161,7 +218,12 @@ def _commit_with_rebase(
 ) -> int:
     """Optimistic concurrency control over the CAS commit — the Delta
     conflict-resolution loop (Armbrust et al. VLDB 2020 §3.2) at the
-    ledger's partition grain.
+    ledger's partition grain. It is the commit of every operation scoped
+    to partitions (merge, replace, delete, compact, and a refresh that
+    only advances a watermark, with an empty ``touched``). Operations
+    whose read set is the whole table commit with the plain ``_commit``
+    instead: replaying their manifest over a competitor's would keep
+    partitions they never read.
 
     ``manifest`` was built against snapshot ``base_version``; ``touched``
     is the operation's combined read+write set (the partition values it
@@ -178,6 +240,10 @@ def _commit_with_rebase(
     conflict. A concurrent commit that already advanced this writer's
     ``txn`` watermark turns the retry into a no-op (exactly-once is
     preserved across the rebase)."""
+
+    def names(schema: dict | None) -> set[str]:
+        return {f["name"] for f in (schema or {}).get("fields", [])}
+
     version = base_version + 1
     for _ in range(max_retries + 1):
         try:
@@ -186,9 +252,7 @@ def _commit_with_rebase(
         except RuntimeError:
             latest_v = _manifest_versions(path)[-1]
             latest_m = _read_manifest(path, latest_v)
-            if txn is not None and txn[1] <= latest_m.get("txn", {}).get(
-                txn[0], -1
-            ):
+            if _replayed(latest_m, txn):
                 return latest_v  # competitor applied this very transaction
             if latest_m["partition_col"] != base_m["partition_col"] or (
                 latest_m["partition_dtype"] != base_m["partition_dtype"]
@@ -211,31 +275,19 @@ def _commit_with_rebase(
                 ) from None
             schema = manifest.get("schema")
             if latest_m.get("schema") != base_m.get("schema"):
-                if schema == base_m.get("schema"):
-                    # competitor widened; additive evolution means our
-                    # files simply materialize the new columns as NULLs
-                    base_names = {
-                        f["name"] for f in (base_m.get("schema") or {}).get(
-                            "fields", []
-                        )
-                    }
-                    latest_names = {
-                        f["name"]
-                        for f in (latest_m.get("schema") or {}).get(
-                            "fields", []
-                        )
-                    }
-                    if not base_names <= latest_names:
-                        raise LedgerConcurrentWriteError(
-                            f"concurrent non-additive schema change on "
-                            f"{path} — cannot rebase"
-                        ) from None
-                    schema = latest_m.get("schema")
-                else:
+                if schema != base_m.get("schema"):
                     raise LedgerConcurrentWriteError(
                         f"both writers evolved the schema of {path} from "
                         f"v{base_version} — cannot rebase"
                     ) from None
+                # competitor widened; additive evolution means our files
+                # simply materialize the new columns as NULLs
+                if not names(base_m.get("schema")) <= names(latest_m.get("schema")):
+                    raise LedgerConcurrentWriteError(
+                        f"concurrent non-additive schema change on "
+                        f"{path} — cannot rebase"
+                    ) from None
+                schema = latest_m.get("schema")
             dv_key = manifest.get("dv_key")
             if dv_key == base_m.get("dv_key"):
                 dv_key = latest_m.get("dv_key")
@@ -249,19 +301,7 @@ def _commit_with_rebase(
                 **manifest,
                 "schema": schema,
                 "dv_key": dv_key,
-                # watermarks are monotone: per-app MAX, so carrying the
-                # base's stale value for an app the competitor advanced
-                # can never roll that app's exactly-once floor backwards
-                "txn": {
-                    app: max(
-                        latest_m.get("txn", {}).get(app, -1),
-                        manifest.get("txn", {}).get(app, -1),
-                    )
-                    for app in {
-                        *latest_m.get("txn", {}),
-                        *manifest.get("txn", {}),
-                    }
-                },
+                "txn": _max_watermarks(latest_m.get("txn", {}), manifest.get("txn", {})),
                 "partitions": {
                     **{
                         pv: e
@@ -354,14 +394,13 @@ def _partition_blooms(
     rows cannot change a single bit, and the partial (map-side) OR
     already collapses each task's output to ≤ partitions·bits/64 rows —
     a pre-dedup pass would add a full-width exchange of the exploded
-    rows for nothing (round 13, guide §2.4).
+    rows for nothing.
 
     The key is cast to the INDEX's recorded dtype before hashing:
     xxhash64 hashes int/long/string representations of the same value
     differently, so build and probe must hash the identical type or
-    matching partitions would prune as false NEGATIVES (the round-7
-    advice finding — a silent-skip correctness break for the takedown
-    path)."""
+    matching partitions would prune as false NEGATIVES (a silent skip
+    that would break the takedown path)."""
     kc = F.col(key_col).cast(key_dtype) if key_dtype else F.col(key_col)
     words = (
         df.select(
@@ -406,9 +445,9 @@ def _write_data_dir(
     Entry KEYS are the raw cast-to-string partition values from the stats
     aggregate — NOT the Hive directory suffixes, which percent-escape
     special characters (space, ':', '%') and would make ledger_merge /
-    ledger_delete's raw-value lookups miss (the round-7 advice finding:
-    a timestamp-partitioned merge would have repointed the escaped key
-    and silently dropped the partition's existing rows). Each entry
+    ledger_delete's raw-value lookups miss (a timestamp-partitioned
+    merge would repoint the escaped key and silently drop the
+    partition's existing rows). Each entry
     records its actual ``dirname`` so readers never re-derive the escaped
     form. The two views are joined by unescaping the listed directory
     names (Hive escaping is plain %XX percent-encoding); any mismatch is
@@ -446,14 +485,13 @@ def _write_data_dir(
     files: dict[str, dict[str, dict]] = {}
     if stats_cols:
         # ONE readback aggregate at the (partition, file) grain serves
-        # BOTH metadata grains (round 13, guide §1.2/§6): the per-file
+        # BOTH metadata grains: the per-file
         # rows are the Delta/Iceberg skip payload, and the partition
         # stats are their exact driver-side fold — sum of per-file row
         # counts, min of per-file mins, max of per-file maxs (the
         # min/max casts in _stats_aggs are monotonic, and the fold
-        # ignores all-NULL files exactly like a direct aggregate). The
-        # separate partition-grain readback scan the old code paid per
-        # write is gone.
+        # ignores all-NULL files exactly like a direct aggregate), so no
+        # separate partition-grain readback scan runs.
         aggs, kinds = _stats_aggs(back, stats_cols)
         rows = (
             back.groupBy(
@@ -749,7 +787,7 @@ def _read_partitions(
     narrows chosen partitions to specific data files (ledger_plan_files'
     skip grain). Zero partitions yields an EMPTY frame typed from the
     manifest's recorded schema — reachable via a delete that empties the
-    table — instead of the round-7 IndexError.
+    table — rather than failing on an empty union.
 
     Partitions carrying a deletion vector (``ledger_delete`` in ``dv``
     mode) are read through a (key, partition) anti-join against their
@@ -951,7 +989,7 @@ def ledger_merge(
     from weather_api_automate_etl_spark.operators.cdc import merge_into
 
     v, m = _resolve(path, None)
-    if txn is not None and txn[1] <= m.get("txn", {}).get(txn[0], -1):
+    if _replayed(m, txn):
         return v  # transaction already applied: replay is a pure no-op
     pcol = m["partition_col"]
     table_cols = (
@@ -981,12 +1019,7 @@ def ledger_merge(
             )
     updates = _conform(updates, m)
     _enforce_checks(updates, m.get("checks"))
-    touched = [
-        r["__pv"]
-        for r in updates.select(
-            F.col(pcol).cast("string").alias("__pv")
-        ).distinct().collect()
-    ]
+    touched = _partition_values(updates, pcol)
     if not touched:
         return v
     existing = [pv for pv in touched if pv in m["partitions"]]
@@ -999,30 +1032,16 @@ def ledger_merge(
         merged = merge_into(current, updates.select(*current.columns), key)
     else:
         merged = updates
-    new_schema = m.get("schema")
-    if new_cols:
-        new_schema = merged.schema.jsonValue()
     entries = _write_data_dir(
         merged, path, pcol, m.get("stats_cols", []), m.get("key_index"),
         partition_dtype=m["partition_dtype"],
     )
-    manifest = {
-        "partition_col": pcol,
-        "partition_dtype": m["partition_dtype"],
-        "schema": new_schema,
-        "stats_cols": m.get("stats_cols", []),
-        "key_index": m.get("key_index"),
-        "dv_key": m.get("dv_key"),
-        "checks": m.get("checks"),
-        "op": "MERGE",
-        "txn": {
-            **m.get("txn", {}),
-            **({txn[0]: txn[1]} if txn else {}),
-        },
-        "partitions": {**m["partitions"], **entries},
-    }
+    manifest = _next_manifest(
+        m, "MERGE", {**m["partitions"], **entries}, txn,
+        schema=merged.schema.jsonValue() if new_cols else m.get("schema"),
+    )
     return _commit_with_rebase(
-        path, v, m, manifest, set(touched) | set(entries), txn=txn
+        path, v, m, manifest, touched | set(entries), txn=txn
     )
 
 
@@ -1051,14 +1070,12 @@ def ledger_replace_partitions(
     ``df``'s columns are cast to the recorded types as in ledger_merge
     (see ``_conform``). Returns the committed version."""
     v, m = _resolve(path, None)
-    if txn is not None and txn[1] <= m.get("txn", {}).get(txn[0], -1):
+    if _replayed(m, txn):
         return v  # transaction already applied: replay is a pure no-op
     pcol = m["partition_col"]
     target = {str(pv) for pv in partitions}
-    carried = df.select(F.col(pcol).cast("string").alias("__pv")).distinct()
     out_of_scope = sorted(
-        r["__pv"] for r in carried.collect()
-        if r["__pv"] is None or r["__pv"] not in target
+        pv for pv in _partition_values(df, pcol) if pv is None or pv not in target
     )
     if out_of_scope:
         raise ValueError(
@@ -1071,28 +1088,8 @@ def ledger_replace_partitions(
         df, path, pcol, m.get("stats_cols", []), m.get("key_index"),
         partition_dtype=m["partition_dtype"],
     )
-    manifest = {
-        "partition_col": pcol,
-        "partition_dtype": m["partition_dtype"],
-        "schema": m.get("schema"),
-        "stats_cols": m.get("stats_cols", []),
-        "key_index": m.get("key_index"),
-        "dv_key": m.get("dv_key"),
-        "checks": m.get("checks"),
-        "op": "REPLACE",
-        "txn": {
-            **m.get("txn", {}),
-            **({txn[0]: txn[1]} if txn else {}),
-        },
-        "partitions": {
-            **{
-                pv: e
-                for pv, e in m["partitions"].items()
-                if pv not in target
-            },
-            **entries,
-        },
-    }
+    kept = {pv: e for pv, e in m["partitions"].items() if pv not in target}
+    manifest = _next_manifest(m, "REPLACE", {**kept, **entries}, txn)
     return _commit_with_rebase(
         path, v, m, manifest, target | set(entries), txn=txn
     )
@@ -1188,20 +1185,11 @@ def ledger_compact(
         compacted, path, pcol, m.get("stats_cols", []), m.get("key_index"),
         partition_dtype=m["partition_dtype"],
     )
-    manifest = {
-        "partition_col": pcol,
-        "partition_dtype": m["partition_dtype"],
-        "schema": m.get("schema"),
-        "stats_cols": m.get("stats_cols", []),
-        "key_index": m.get("key_index"),
-        "dv_key": m.get("dv_key"),
-        "checks": m.get("checks"),
-        "op": "OPTIMIZE ZORDER" if zorder_by else "OPTIMIZE",
-        "txn": m.get("txn", {}),
-        "partitions": {**m["partitions"], **entries},
-    }
-    _commit(path, manifest, v + 1)
-    return v + 1
+    manifest = _next_manifest(
+        m, "OPTIMIZE ZORDER" if zorder_by else "OPTIMIZE",
+        {**m["partitions"], **entries},
+    )
+    return _commit_with_rebase(path, v, m, manifest, set(partitions))
 
 
 def ledger_vacuum(
@@ -1265,7 +1253,9 @@ def ledger_add_check(
         raise ValueError(f"constraint {name!r} already exists on {path}")
     snap = _read_partitions(spark, path, m, list(m["partitions"]))
     _enforce_checks(snap, {name: predicate})
-    manifest = {**m, "op": "ADD CONSTRAINT", "checks": {**checks, name: predicate}}
+    manifest = _next_manifest(
+        m, "ADD CONSTRAINT", m["partitions"], checks={**checks, name: predicate}
+    )
     _commit(path, manifest, v + 1)
     return v + 1
 
@@ -1298,21 +1288,14 @@ def ledger_clone(
     _, m = _resolve(src_path, version)
     src_abs = os.path.abspath(src_path)
 
+    def _abs_dir(e: dict) -> dict:
+        # os.path.join keeps an already-absolute dir as it is
+        return {**e, "dir": os.path.join(src_abs, e["dir"])}
+
     def _abs_entry(e: dict) -> dict:
-        out = {
-            **e,
-            "dir": e["dir"]
-            if os.path.isabs(e["dir"])
-            else os.path.join(src_abs, e["dir"]),
-        }
+        out = _abs_dir(e)
         if e.get("dv"):
-            dv = e["dv"]
-            out["dv"] = {
-                **dv,
-                "dir": dv["dir"]
-                if os.path.isabs(dv["dir"])
-                else os.path.join(src_abs, dv["dir"]),
-            }
+            out["dv"] = _abs_dir(e["dv"])
         return out
     manifest = {
         **m,
@@ -1357,17 +1340,8 @@ def ledger_restore(path: str, version: int) -> int:
         return current_v
     target = _read_manifest(path, version)
     current = _read_manifest(path, current_v)
-    manifest = {
-        **target,
-        "op": "RESTORE",
-        "txn": {
-            app: max(
-                target.get("txn", {}).get(app, -1),
-                current.get("txn", {}).get(app, -1),
-            )
-            for app in {*target.get("txn", {}), *current.get("txn", {})}
-        },
-    }
+    manifest = _next_manifest(target, "RESTORE", target["partitions"])
+    manifest["txn"] = _max_watermarks(manifest["txn"], current.get("txn", {}))
     _commit(path, manifest, current_v + 1)
     return current_v + 1
 
@@ -1433,7 +1407,7 @@ def ledger_delete(
     if mode not in ("rewrite", "dv"):
         raise ValueError(f"mode must be 'rewrite' or 'dv', got {mode!r}")
     v, m = _resolve(path, None)
-    if txn is not None and txn[1] <= m.get("txn", {}).get(txn[0], -1):
+    if _replayed(m, txn):
         return v
     if mode == "dv" and m.get("dv_key") not in (None, key):
         raise ValueError(
@@ -1446,18 +1420,9 @@ def ledger_delete(
     if pcol in keys.columns:
         # caller-named partitions narrow the scope, but the exact
         # confirm scan below still runs: a no-match delete must commit
-        # NOTHING (round-10 review finding — the old path rewrote whole
-        # partitions byte-identically and, in dv mode, set dv_key on a
-        # table with zero actual tombstones)
-        scan_over = sorted(
-            {
-                r["__pv"]
-                for r in keys.select(
-                    F.col(pcol).cast("string").alias("__pv")
-                ).distinct().collect()
-            }
-            & set(m["partitions"])
-        )
+        # NOTHING (no byte-identical partition rewrite, and in dv mode no
+        # dv_key on a table with zero actual tombstones)
+        scan_over = sorted(_partition_values(keys, pcol) & set(m["partitions"]))
     else:
         scan_over = list(m["partitions"])
         if (
@@ -1501,13 +1466,7 @@ def ledger_delete(
     # false positives and caller-named no-hit partitions are confirmed
     # OUT here, so a no-hit partition is never rewritten
     snap = _read_partitions(spark, path, m, scan_over)
-    candidates = sorted(
-        r["__pv"]
-        for r in snap.join(kdf, key, "left_semi")
-        .select(F.col(pcol).cast("string").alias("__pv"))
-        .distinct()
-        .collect()
-    )
+    candidates = _partition_values(snap.join(kdf, key, "left_semi"), pcol)
     if not candidates:
         return v
     current = _read_partitions(spark, path, m, candidates)
@@ -1545,31 +1504,17 @@ def ledger_delete(
             kept, path, pcol, m.get("stats_cols", []), ki,
             partition_dtype=m["partition_dtype"],
         )
+    # every candidate holds a hit, so dv mode writes a sidecar for each
+    # and a rewrite drops the candidates it emptied
     remaining = {
         pv: e for pv, e in m["partitions"].items() if pv not in candidates
     }
-    if mode == "dv":
-        # DV mode only repoints sidecars; untouched candidates carry over
-        remaining = {
-            pv: e for pv, e in m["partitions"].items() if pv not in entries
-        }
-    manifest = {
-        "partition_col": pcol,
-        "partition_dtype": m["partition_dtype"],
-        "schema": m.get("schema"),
-        "stats_cols": m.get("stats_cols", []),
-        "key_index": ki,
-        "dv_key": key if mode == "dv" else m.get("dv_key"),
-        "checks": m.get("checks"),
-        "op": "DELETE DV" if mode == "dv" else "DELETE",
-        "txn": {
-            **m.get("txn", {}),
-            **({txn[0]: txn[1]} if txn else {}),
-        },
-        "partitions": {**remaining, **entries},
-    }
+    manifest = _next_manifest(
+        m, "DELETE DV" if mode == "dv" else "DELETE", {**remaining, **entries},
+        txn, dv_key=key if mode == "dv" else m.get("dv_key"),
+    )
     return _commit_with_rebase(
-        path, v, m, manifest, set(candidates) | set(entries), txn=txn
+        path, v, m, manifest, candidates | set(entries), txn=txn
     )
 
 
@@ -1729,17 +1674,10 @@ def ledger_repartition(
     entries = _write_data_dir(
         snap, path, new_partition_col, stats, key_index, partition_dtype=dtype
     )
-    manifest = {
-        "partition_col": new_partition_col,
-        "partition_dtype": dtype,
-        "schema": m["schema"],
-        "stats_cols": stats,
-        "key_index": key_index,
-        "dv_key": None,
-        "checks": m.get("checks"),
-        "op": "REPARTITION",
-        "txn": m.get("txn", {}),
-        "partitions": entries,
-    }
+    manifest = _next_manifest(
+        m, "REPARTITION", entries, partition_col=new_partition_col,
+        partition_dtype=dtype, stats_cols=stats, key_index=key_index,
+        dv_key=None,
+    )
     _commit(path, manifest, cur_v + 1)
     return cur_v + 1

@@ -110,10 +110,6 @@ def _latest_per_key(
     )
 
 
-def _ledger_exists(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_ledger"))
-
-
 def _write_or_merge(
     df: DataFrame,
     path: str,
@@ -125,7 +121,7 @@ def _write_or_merge(
     """Write the ledger at ``path`` if it is missing (the sink bootstraps
     its table from the first batch), else merge ``df`` into it — both
     carrying the same exactly-once ``txn`` watermark."""
-    if not _ledger_exists(path):
+    if not ledger._manifest_versions(path):
         ledger.ledger_write(
             df.sparkSession, df, path, partition_col,
             stats_cols=stats_cols, txn=txn,
@@ -249,7 +245,7 @@ def stream_merge_with_mv(
             _latest_per_key(batch_df, key, order_cols), table_path, key,
             partition_col, (query_name, batch_id),
         )
-        if not _ledger_exists(mv_path):
+        if not ledger._manifest_versions(mv_path):
             matview.mv_build(
                 spark, table_path, mv_path, list(group_cols), aggs_fn()
             )
@@ -309,7 +305,7 @@ def stream_apply_cdc_into_ledger(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         latest = _latest_per_key(batch_df, key, (seq_col, op_col))
-        exists = _ledger_exists(table_path)
+        exists = bool(ledger._manifest_versions(table_path))
         if exists:
             current = ledger.ledger_read(spark, table_path).select(
                 key, F.col(seq_col).alias("__cur_seq")
